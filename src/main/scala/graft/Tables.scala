@@ -1,13 +1,19 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's parquet star schema (TESTDATA.md / FIXTURES.md §B).
   *
-  * Each table is one parquet file under `sfDir`. We always go through
-  * `spark.read.parquet` so Catalyst gets a relation it can push filters and
-  * column pruning into — `.explain` on any query here should show
-  * `PushedFilters` / a narrowed `ReadSchema`.
+  * Each table is one parquet file (or a directory of them) under `sfDir`.
+  * We always go through `spark.read.parquet` so Catalyst gets a relation it
+  * can push filters and column pruning into — `.explain` on any query here
+  * should show `PushedFilters` / a narrowed `ReadSchema`.
   *
   * At 100 TB these would be partitioned/ bucketed catalog tables; the loader
   * is the single seam where that swap happens (nothing else in the library
@@ -38,25 +44,71 @@ object Tables {
     * relation — a parquet footer's record count is exact — but costs ZERO
     * Spark jobs, so plan-build-time sizing decisions (`scaledLshBits`,
     * `vecsFitBroadcast`) stop billing a job per fresh plan. This is the
-    * statistic a catalog table carries for free at 100 TB; the footer read
-    * is the single-file stand-in for that metadata lookup.
+    * statistic a catalog table carries for free at 100 TB; the footer reads
+    * are the stand-in for that metadata lookup.
     */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
     countCache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
       val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = root.getFileSystem(conf)
-      val files: Seq[org.apache.hadoop.fs.Path] =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).toSeq.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-        else Seq(root)
-      files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      dataFiles(conf, s"$sfDir/$name.parquet")
+        .map(f => withFooter(conf, f)(_.getRecordCount)).sum
     })
+
+  /** The schema `spark.read.parquet(path).schema` would infer, read on the
+    * driver from one footer. Inference runs this very conversion
+    * (`ParquetFileFormat.mergeSchemasInParallel`: the first data file by
+    * path, the Spark row metadata when present, else the parquet schema
+    * through a converter built from the session conf) — but inside a
+    * one-task job. Passing the result to `spark.read.schema(...)` makes a
+    * table load cost zero jobs. The result depends on the session conf
+    * (`nanosAsLong`, NTZ inference).
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, path).head
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    withFooter(conf, first) { r =>
+      ParquetFileFormat.readSchemaFromFooter(new Footer(first, r.getFooter), converter)
+    }
+  }
+
+  /** Data files of a parquet path: the path itself when it is a file, else
+    * every file below it at any depth, skipping `_`/`.`-prefixed names
+    * (`_SUCCESS`, `.crc` sidecars, `_temporary/`) as Spark's file index
+    * does, sorted by path as schema inference orders them. A layout with
+    * no data file fails here rather than counting 0 rows.
+    */
+  private def dataFiles(conf: Configuration, path: String): Seq[Path] = {
+    val fs = new Path(path).getFileSystem(conf)
+    // qualified, so the hidden-name test below never sees the components
+    // of a relative root's working directory
+    val root = fs.makeQualified(new Path(path))
+    val files =
+      if (!fs.getFileStatus(root).isDirectory) Seq(root)
+      else {
+        val rootDepth = root.depth
+        val it = fs.listFiles(root, true)
+        val out = Seq.newBuilder[Path]
+        while (it.hasNext) {
+          val f = it.next().getPath
+          val hidden = Iterator.iterate(f)(_.getParent)
+            .takeWhile(_.depth > rootDepth)
+            .exists { p =>
+              val n = p.getName
+              (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+            }
+          if (!hidden) out += f
+        }
+        out.result().sortBy(_.toString)
+      }
+    require(files.nonEmpty, s"no parquet data files under $path")
+    files
+  }
+
+  private def withFooter[T](conf: Configuration, f: Path)(fn: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try fn(r) finally r.close()
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     cache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
@@ -72,7 +124,10 @@ object Tables {
       if (name == "events" &&
           spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      // footer-read schema (set AFTER the conf rescue above, which the
+      // conversion reads): the load starts no job
+      val path = s"$sfDir/$name.parquet"
+      val raw = spark.read.schema(footerSchema(spark, path)).parquet(path)
       // Normalize events.ts to TimestampType regardless of how the fixture
       // ships it, so every downstream query sees one stable type:
       //  - timestamp[ns]  → LongType via nanosAsLong → timestamp_micros(ns/1000)

@@ -106,7 +106,9 @@ case class MinHashSketch(
     buf
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  // a copy, so the result never aliases the live aggregation buffer (a
+  // window frame may evaluate a TypedImperativeAggregate repeatedly)
+  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 * k)

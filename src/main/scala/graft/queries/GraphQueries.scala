@@ -2,21 +2,26 @@ package graft.queries
 
 import graft.Tables
 import graft.plans.Fnv1a64
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Iterative graph computation — connected components by min-label
   * propagation, the Pregel-shaped workload a MapReduce lineage engine should
   * express (the reference stops at single-pass vertex degree,
   * /root/reference/src/app/vertex_degree.rs).
   *
-  * Each iteration is one distributed join+aggregate; the driver only sees a
-  * scalar convergence count. Scale notes: per-iteration persist + unpersist
-  * keeps lineage short (at 100 TB you'd checkpoint every ~5 rounds to
-  * truncate the DAG); edges are re-used across iterations so they're
-  * persisted once; min-label propagation converges in O(component diameter)
-  * rounds regardless of cluster size.
+  * Each round of the components loop is one Spark job of two stages over
+  * pair RDDs that share one hash partitioner (see `minLabelPropagation`);
+  * the driver only sees a scalar convergence sum. Edges are partitioned
+  * and checkpointed once and re-used by every round, each round's labels
+  * are local-checkpointed and the previous round's released, and
+  * min-label propagation converges in O(component diameter) rounds
+  * regardless of cluster size. The other iterative queries here run
+  * DataFrame rounds truncated by lazy `localCheckpoint`s.
   */
 object GraphQueries {
 
@@ -80,60 +85,188 @@ object GraphQueries {
     * with comp = min vertex id reachable. Shared by connected components
     * here and near-dup cluster resolution (PipelineQueries.dedupClusters).
     *
-    * localCheckpoint (not persist) each round: persist caches the data but
-    * the logical plan still nests one level per iteration, and Catalyst
-    * re-analysis of the growing tree turns O(diameter) iterations into
-    * exponential planning time (measured: iter 7 = 103 s with persist,
-    * < 1 s checkpointed). Checkpointing truncates the plan to the
-    * materialized partitions — the iterative-algorithm idiom on Spark. On
-    * a cluster use checkpoint(reliable) against the DFS instead.
+    * Vertex/edge co-partitioning, as in GraphX's Pregel: the edges are
+    * hash-partitioned on `u` once and held per partition as a CSR block
+    * (`Adjacency`), and every round's labels are one array per partition
+    * aligned with that block's vertices, so reading a vertex's label next
+    * to its out-edges is a narrow zip. A round is one job of two stages:
+    *   - map: each vertex whose label dropped last round sends it to its
+    *     neighbours, combined per target on the map side — a vertex whose
+    *     label held already delivered it, so the labels after every round
+    *     equal full propagation's and the round count is unchanged;
+    *   - reduce: the min of the messages lands on the same partitioner,
+    *     zipped with the old labels, and the label sum — the convergence
+    *     probe — is the job's action.
+    * No Catalyst, AQE or codegen work runs per round. Round 1 folds into
+    * the edge-partitioning job: the edges are symmetric, so a vertex's
+    * first label, min(u, min over its neighbours), is computed on its own
+    * partition.
+    *
+    * Convergence via the label-sum invariant: min-propagation only ever
+    * DECREASES labels, so any change strictly decreases the sum; equal
+    * consecutive sums ⇔ fixpoint (an empty graph sums to 0 twice). Each
+    * round's labels are `localCheckpoint`ed — materialized by the probe
+    * in the same job — and the previous round's blocks released once
+    * the new ones exist. On a cluster use reliable checkpoints against
+    * the DFS instead. Batching several rounds into one job (the dagLayers
+    * self-loop device) was measured slower on the earlier DataFrame round
+    * at sf0.1 (r11: 4.3 s round-at-a-time vs 7.7-8.3 s batched) and has
+    * not been re-measured on these rounds.
     */
   private[queries] def minLabelPropagation(und: DataFrame, maxIter: Int): DataFrame = {
-    val e = und.select(col("u"), col("v")).localCheckpoint(false)
-    var labels = e.select(col("u").as("vtx")).distinct()
-      .withColumn("comp", col("vtx")).localCheckpoint(false)
-    var converged = false
-    var i = 0
-    // Convergence via the label-sum invariant: min-propagation only ever
-    // DECREASES labels, so any change strictly decreases sum(comp); equal
-    // consecutive sums ⇔ fixpoint. One aggregate job per iteration instead
-    // of the join+count a changed-row comparison needs. The sum is
-    // null-coalesced so an EMPTY graph (sum over zero rows is SQL null)
-    // converges to an empty result instead of NPEing on getLong.
-    //
-    // r11 note (measured, guide §1.1): batching rounds 9-deep per job via
-    // the self-loop device (see dagLayers) was tried here and REJECTED —
-    // this edge set is ~50× dagLayers' (both directions of every
-    // co-occurrence edge), so the extra in-plan rounds past the ~5-round
-    // fixture fixpoint cost far more data work than the saved per-round
-    // driver latency (warm sf0.1: 4.3 s round-at-a-time vs 7.7-8.3 s
-    // batched). Round-at-a-time with lazy checkpoints stays.
-    var lastSum = Long.MinValue
-    while (!converged && i < maxIter) {
-      val viaNeighbors = e.join(labels, e("u") === labels("vtx"))
-        .select(col("v").as("vtx"), col("comp"))
-      // LAZY checkpoint: the logical plan truncates immediately (no Catalyst
-      // re-analysis blowup), and the convergence aggregate below materializes
-      // the checkpointed RDD in the SAME job — one job per iteration instead
-      // of the two an eager checkpoint costs (measured ~35% off the loop).
-      val next = labels.select(col("vtx"), col("comp")).union(viaNeighbors)
-        .groupBy("vtx").agg(min("comp").as("comp"))
-        .localCheckpoint(false)
-      val s = next.agg(coalesce(sum(col("comp")), lit(0L)))
-        .collect()(0).getLong(0)
-      labels = next
-      converged = s == lastSum
-      lastSum = s
-      i += 1
-    }
     // The oracle (recursive CTE) computes the TRUE fixpoint; returning
     // partially-propagated labels on a graph whose diameter exceeds the
     // iteration budget would silently diverge from it. Fail loudly instead.
-    if (!converged)
-      throw new IllegalStateException(
-        s"min-label propagation did not converge within $maxIter iterations" +
-          " — raise maxIter (component diameter exceeds the budget)")
-    labels
+    def exhausted = new IllegalStateException(
+      s"min-label propagation did not converge within $maxIter iterations" +
+        " — raise maxIter (component diameter exceeds the budget)")
+    if (maxIter < 1) throw exhausted
+    val s = und.sparkSession
+    val pairs = und.select(col("u").cast("long"), col("v").cast("long"))
+      .queryExecution.toRdd.map { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1), "null vertex id in the edge set")
+        (r.getLong(0), r.getLong(1))
+      }
+    // as many partitions as AQE sized the edge set into, at most the
+    // session's shuffle partitions: a small graph runs few tasks a round
+    val part = new HashPartitioner(math.max(1,
+      math.min(s.sessionState.conf.numShufflePartitions, pairs.getNumPartitions)))
+    val base = pairs.partitionBy(part).mapPartitions({ it =>
+      val a = Adjacency(it)
+      Iterator((a, a.firstLabels))
+    }, preservesPartitioning = true).localCheckpoint()
+    val adj = base.mapPartitions(_.map(_._1), preservesPartitioning = true)
+    var labels = base.mapPartitions(_.map(_._2), preservesPartitioning = true)
+    var lastSum = labelSum(labels) // round 1
+    var converged = false
+    var i = 1
+    while (!converged && i < maxIter) {
+      val msgs = adj.zipPartitions(labels)((a, l) => only(a).messages(only(l)))
+        .partitionBy(part)
+      val next = adj.zipPartitions(labels, msgs) { (a, l, m) =>
+        Iterator(only(a).receive(only(l), m))
+      }.localCheckpoint()
+      val sum = labelSum(next)
+      labels.unpersist(blocking = false)
+      labels = next
+      converged = sum == lastSum
+      lastSum = sum
+      i += 1
+    }
+    if (!converged) throw exhausted
+    val rows = adj.zipPartitions(labels) { (a, l) =>
+      val (vtx, comp) = (only(a).vtx, only(l).comp)
+      Iterator.tabulate(vtx.length)(k => Row(vtx(k), comp(k)))
+    }
+    s.createDataFrame(rows, new StructType().add("vtx", LongType).add("comp", LongType))
+  }
+
+  /** A partition's single block. Draining the iterator releases the
+    * cached block's read lock as soon as it is taken. */
+  private def only[T](it: Iterator[T]): T = {
+    val x = it.next()
+    require(!it.hasNext, "one block per partition")
+    x
+  }
+
+  private def labelSum(labels: RDD[Labels]): Long =
+    labels.map { l =>
+      var t = 0L
+      l.comp.foreach(t += _)
+      t
+    }.fold(0L)(_ + _)
+
+  /** One partition's labels, aligned with its `Adjacency.vtx`, and the
+    * vertices whose label dropped in the round that produced them. */
+  private final class Labels(val comp: Array[Long], val changed: java.util.BitSet)
+      extends Serializable
+
+  /** One partition's edges in CSR form: sorted distinct sources `vtx`, the
+    * neighbours of `vtx(i)` at `nbr(off(i) until off(i + 1))`. */
+  private final class Adjacency(val vtx: Array[Long], off: Array[Int],
+      nbr: Array[Long]) extends Serializable {
+
+    private def index(v: Long): Int = {
+      val i = java.util.Arrays.binarySearch(vtx, v)
+      require(i >= 0, s"vertex $v has an in-edge but no out-edge:" +
+        " the edge set must hold both directions")
+      i
+    }
+
+    /** Round 1: min(u, min over u's neighbours). */
+    def firstLabels: Labels = {
+      val comp = new Array[Long](vtx.length)
+      val changed = new java.util.BitSet(vtx.length)
+      var i = 0
+      while (i < vtx.length) {
+        var c = vtx(i)
+        var j = off(i)
+        while (j < off(i + 1)) { if (nbr(j) < c) c = nbr(j); j += 1 }
+        comp(i) = c
+        if (c < vtx(i)) changed.set(i)
+        i += 1
+      }
+      new Labels(comp, changed)
+    }
+
+    /** The changed vertices' labels, min-combined per neighbour. */
+    def messages(l: Labels): Iterator[(Long, Long)] = {
+      val best = scala.collection.mutable.LongMap.empty[Long]
+      var i = l.changed.nextSetBit(0)
+      while (i >= 0) {
+        val c = l.comp(i)
+        var j = off(i)
+        while (j < off(i + 1)) {
+          if (c < best.getOrElse(nbr(j), Long.MaxValue)) best.update(nbr(j), c)
+          j += 1
+        }
+        i = l.changed.nextSetBit(i + 1)
+      }
+      best.iterator
+    }
+
+    /** The next round's labels: the old ones lowered by the messages. */
+    def receive(old: Labels, msgs: Iterator[(Long, Long)]): Labels = {
+      val comp = old.comp.clone()
+      val changed = new java.util.BitSet(vtx.length)
+      msgs.foreach { case (v, c) =>
+        val i = index(v)
+        if (c < comp(i)) { comp(i) = c; changed.set(i) }
+      }
+      new Labels(comp, changed)
+    }
+  }
+
+  private object Adjacency {
+    def apply(edges: Iterator[(Long, Long)]): Adjacency = {
+      val us = Array.newBuilder[Long]
+      val vs = Array.newBuilder[Long]
+      edges.foreach { case (u, v) => us += u; vs += v }
+      val (u, v) = (us.result(), vs.result())
+      val sorted = u.clone()
+      java.util.Arrays.sort(sorted)
+      var m = 0
+      var j = 0
+      while (j < sorted.length) {
+        if (m == 0 || sorted(m - 1) != sorted(j)) { sorted(m) = sorted(j); m += 1 }
+        j += 1
+      }
+      val vtx = java.util.Arrays.copyOf(sorted, m)
+      val off = new Array[Int](m + 1)
+      u.foreach(x => off(java.util.Arrays.binarySearch(vtx, x) + 1) += 1)
+      j = 0
+      while (j < m) { off(j + 1) += off(j); j += 1 }
+      val fill = java.util.Arrays.copyOf(off, m)
+      val nbr = new Array[Long](u.length)
+      j = 0
+      while (j < u.length) {
+        val i = java.util.Arrays.binarySearch(vtx, u(j))
+        nbr(fill(i)) = v(j)
+        fill(i) += 1
+        j += 1
+      }
+      new Adjacency(vtx, off, nbr)
+    }
   }
 
   private def computeComponents(s: SparkSession, d: String, maxIter: Int): DataFrame =

@@ -100,11 +100,12 @@ object StreamingBridge {
 
   /** The events parquet as a bounded stream, with the same ns→µs timestamp
     * normalization the batch loader applies (streaming sources require an
-    * explicit schema, so the raw — nanosAsLong — schema is probed first).
+    * explicit schema, so the raw — nanosAsLong — schema is read first, from
+    * a footer on the driver: no inference job).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     Tables.events(s, d) // ensures the nanosAsLong conf is in place
-    val raw = s.read.parquet(s"$d/events.parquet").schema
+    val raw = Tables.footerSchema(s, s"$d/events.parquet")
     // glob form: FileStreamSource requires a directory or glob basePath,
     // and the fixture is a single parquet file
     val src = s.readStream.schema(raw).parquet(s"$d/{events}.parquet")
@@ -148,7 +149,7 @@ object StreamingBridge {
     // ≥4 micro-batches, so the StateParts sizing matters most here
     val cs = s.newSession()
     StateParts.foreach { case (k, v) => cs.conf.set(k, v) }
-    val raw = cs.read.parquet(root).schema
+    val raw = Tables.footerSchema(cs, root)
     val src =
       cs.readStream.schema(raw).option("maxFilesPerTrigger", "1").parquet(root)
     val counts = src.groupBy("user_id", "event_type")
@@ -573,7 +574,7 @@ object StreamingBridge {
     */
   def simhashDedupViaStream(s: SparkSession, d: String): DataFrame = {
     runSettled(s, "simdedup", OutputMode.Append()) { cs =>
-      val raw = cs.read.parquet(s"$d/documents.parquet").schema
+      val raw = Tables.footerSchema(cs, s"$d/documents.parquet")
       val src = cs.readStream.schema(raw).parquet(s"$d/{documents}.parquet")
       val sigs = src.select(col("doc_id"),
         DedupQueries.simhashCol.as("simhash"))
