@@ -1,45 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Free ALL cross-query state so per-query timings are order-independent:
-    * memoized plans (whose persisted/checkpointed inputs would otherwise pin
-    * executor memory for the JVM lifetime), the SQL cache, and every
-    * persistent RDD block — the sweep catches both `persist()` blocks and
-    * `localCheckpoint()` blocks, and the module cache clears MUST accompany
-    * it because a checkpoint-truncated plan is unrecoverable once its blocks
-    * are gone. Tables' relation memo holds only unexecuted logical plans
-    * (no executor blocks) but is cleared too so every query pays its own
-    * file-listing/footer cost.
-    */
-  private def resetState(spark: SparkSession): Unit = {
-    queries.DedupQueries.reset()
-    queries.GraphQueries.reset()
-    Tables.reset()
-    spark.catalog.clearCache()
-    // blocking=true: block removal lands HERE (outside any timed window),
-    // never inside the next query's measurement
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // Drain the PREVIOUS query's GC debt outside the timed window (the JMH
-    // forced-GC-between-iterations discipline). Three rounds of full-registry
-    // runs show the alternative: a query scheduled right after a
-    // heap-pressure-heavy one reads 3-10x its isolated cost (e.g.
-    // pipeline_decontam 20.1 s in-run vs 5.1 s solo, r7s3) purely from
-    // inherited old-gen pressure, and those phantom spikes then need manual
-    // isolated requalification every round. The gc cost itself is NOT summed
-    // into any reported number ("total" is the sum of per-query windows).
-    System.gc()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (codegen, parquet footer caches, broadcast machinery)
     // so the first timed query doesn't absorb startup cost
@@ -53,7 +17,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      resetState(spark)
+      Session.reset(spark)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable =>
@@ -62,7 +26,7 @@ object Bench {
       }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
-    resetState(spark)
+    Session.reset(spark)
     // Locale.ROOT: the f-interpolator honors the default locale, and a
     // comma-decimal locale (de_DE etc.) would make the output invalid JSON
     def num(v: Double): String =

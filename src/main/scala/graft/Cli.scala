@@ -93,15 +93,10 @@ object Cli {
         System.err.println(err)
         sys.exit(2)
       case Right(inv) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-          .appName("graft-cli")
-          .config("spark.sql.shuffle.partitions",
+        val spark = Session.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
             inv.numReduce.map(_.toString)
               .getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
+          .appName("graft-cli")
           .getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
         try print(run(spark, inv))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * into any session at build time (SURVEY.md §4 path (c) registration):
   *
   * {{{
-  * SparkSession.builder()
+  * graft.Session.builder(master, partitions)
   *   .withExtensions(new GraftExtensions)          // programmatic
   * // or spark.sql.extensions=graft.plans.GraftExtensions  (config/submit)
   * }}}

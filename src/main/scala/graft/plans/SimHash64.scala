@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `TextFunctions.simhash64`, which unrolls 64 interpreted `aggregate()`
   * higher-order passes per row (64 × n_tokens lambda evaluations plus a
   * several-second codegen bill the streaming micro-batch path pays on
-  * EVERY query start: StreamProbe measured the signed documents stream at
-  * ~3.5 s/batch warm against 0.28 s for the same rows in warm batch).
+  * EVERY query start: an r8 stream probe measured the signed documents
+  * stream at ~3.5 s/batch warm against 0.28 s for the same rows in warm
+  * batch).
   * This expression makes one pass per row over the hash array in compiled
   * code — O(64·n) ALU inside whole-stage codegen, no lambdas.
   *

@@ -108,10 +108,8 @@ object CatalogQueries {
     */
   /** Session confs under which the skew join must EXECUTE (not just
     * plan): broadcast off so the skew machinery absorbs the hot key,
-    * thresholds scaled so the fixture's hot partition trips the split.
-    * Shared with tools.SkewProbe, which re-runs the identical shape at
-    * upscaled SFs and pins `skew=true` in the AQE final plan. */
-  private[graft] val skewJoinConfs = Map(
+    * thresholds scaled so the fixture's hot partition trips the split. */
+  private val skewJoinConfs = Map(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256KB",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256KB")
@@ -123,7 +121,7 @@ object CatalogQueries {
     * this the registry shuffle that stays genuinely skewed under the
     * sf1 upscale, where replication otherwise preserves distribution
     * shapes. */
-  private[graft] def skewJoinShape(s: SparkSession, d: String): DataFrame = {
+  private def skewJoinShape(s: SparkSession, d: String): DataFrame = {
     val fact = Tables.lineitem(s, d).select(
       when(col("l_orderkey") % 100 =!= 0, lit(1L))
         .otherwise(col("l_orderkey") % 1000).as("k"),
@@ -384,9 +382,9 @@ object CatalogQueries {
 
   /** Cache/persist surface: the projected lineitem columns are cached
     * (columnar InMemoryRelation) and the aggregate reads through the
-    * InMemoryTableScan — plan-pinned in SurfaceRoundtripSpec. The sweep in
-    * Verify/Bench unpersists it between queries like every other
-    * persisted block, so the cache cannot leak across the registry.
+    * InMemoryTableScan — plan-pinned in SurfaceRoundtripSpec.
+    * `Session.reset`, which Verify and Bench run between queries, clears
+    * it, so the cache cannot serve or leak into a later query.
     */
   def cachedScan(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

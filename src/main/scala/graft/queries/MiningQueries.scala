@@ -97,7 +97,7 @@ object MiningQueries {
     // 3 unrolled rounds keep the plan shallow enough to stay declarative;
     // Spark's ReuseExchange dedupes the identical edge subtrees. A
     // fixpoint variant would persist edges + localCheckpoint per round
-    // like GraphQueries.computeComponents.
+    // like GraphQueries.connectedComponents.
     val e = GraphQueries.edges(s, d)
     val l0 = e.select(col("u").as("vtx")).distinct()
       .withColumn("lbl", col("vtx"))

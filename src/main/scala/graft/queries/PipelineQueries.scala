@@ -22,38 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  /** Driver-local memo of resolved cluster labels (doc_id → cluster_id),
-    * shared by the three registry consumers of the SAME label set
-    * (`dedup_clusters`, `dedup_cluster_sizes`, `dedup_near_keep_best`).
-    * This is the materialized OUTPUT of a pipeline stage — the role a
-    * cluster-label table plays in a real curation run, computed once per
-    * corpus snapshot and read by every downstream decision — not cached
-    * input data: it holds only the pair-graph vertices (a vanishing
-    * fraction of the corpus; hundreds of tuples on the fixtures) and zero
-    * executor blocks, so Bench's inter-query `resetState` (whose job is
-    * freeing persisted/checkpointed executor memory) deliberately does
-    * NOT clear it. Without the share, each consumer re-derives the entire
-    * ngram-Jaccard pair DAG (~12 s of redundant shingle self-join per
-    * consumer at sf0.1 — the r5 bench's `dedup_near_keep_best` 14.8 s).
-    * Populated only by the local union-find path; the distributed
-    * fallback (pair sets beyond `localCap`) stays unmemoized because its
-    * result is not driver-sized.
-    *
-    * Contract: fixture directories are IMMUTABLE within a JVM (true for
-    * /root/testdata and every driver run) — a caller that rewrites data
-    * under a memoized path must call `reset()` or it will read stale
-    * labels. The memo is size-bounded so pathological key churn (many
-    * sessions/dirs in one JVM) cannot retain unbounded label arrays or
-    * stopped-session keys forever.
-    */
-  private val ClusterMemoMaxEntries = 64
-  private val clusterLabelsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Double, Int), Array[(Long, Long)]]
-
-  /** Test hygiene only (Bench intentionally does not call this — see
-    * `clusterLabelsMemo`).
-    */
-  def reset(): Unit = clusterLabelsMemo.clear()
+  /** No-op: the module keeps no state across queries. Kept because the
+    * benchmark harness (`perfbench` `Harness.resetState`) calls it. */
+  def reset(): Unit = ()
 
   /** Near-dup cluster resolution: connected components over the exact
     * Jaccard ≥ 0.8 pair graph (`dedup_ngram_jaccard`), each doc labeled
@@ -64,14 +35,6 @@ object PipelineQueries {
     */
   def dedupClusters(s: SparkSession, d: String, maxIter: Int = 20,
       threshold: Double = 0.8, localCap: Int = 2000000): DataFrame = {
-    clusterLabelsMemo.get((s, d, maxIter, threshold, localCap)) match {
-      case Some(labels) =>
-        import s.implicits._
-        return labels.toSeq.toDF("doc_id", "cluster_id")
-          .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
-          .orderBy("doc_id")
-      case None => ()
-    }
     val pairs = DedupQueries
       .ngramJaccard(s, d, threshold = threshold, sorted = false)
       .select(col("da"), col("db"))
@@ -114,11 +77,7 @@ object PipelineQueries {
         }
         val vertices = collected.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
         import s.implicits._
-        val labels = vertices.map(v => (v, find(v)))
-        if (clusterLabelsMemo.size >= ClusterMemoMaxEntries)
-          clusterLabelsMemo.clear()
-        clusterLabelsMemo.put((s, d, maxIter, threshold, localCap), labels)
-        labels.toSeq.toDF("doc_id", "cluster_id")
+        vertices.toSeq.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
           .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
           .orderBy("doc_id")
       } else {
@@ -393,8 +352,8 @@ object PipelineQueries {
   /** Near-dup cluster SIZE distribution: how many clusters of each size
     * the pair graph resolves into — the shape parameter that decides
     * whether dedup costs 1% or 30% of the corpus and the first chart of
-    * every dedup report. Rides the memoized connected-components labels
-    * (dedup_clusters); two tiny aggregates on top.
+    * every dedup report. Two tiny aggregates over the `dedup_clusters`
+    * labels.
     */
   def clusterSizes(s: SparkSession, d: String): DataFrame =
     dedupClusters(s, d)

@@ -54,7 +54,7 @@ object StreamingBridge {
     * after the trailing watermark micro-batch (stream-stream OUTER joins:
     * unmatched rows emit on state eviction). Everything else runs
     * Trigger.Once. */
-  /** State-partition sizing (r8, StreamProbe-measured): every stateful
+  /** State-partition sizing (r8, measured by a stream probe): every stateful
     * operator commits one state-store file PER PARTITION PER MICRO-BATCH,
     * a fixed ~100-200 ms I/O cost that is independent of the rows in the
     * store — at 32 shuffle partitions the sf0.1 interval joins (4 stores

@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   * unique tie-break). Range partitions are ordered by construction, so
   * global rank = partition offset + within-partition rank regardless of
   * where the sampled range boundaries land — the sampling in
-  * `repartitionByRange` affects the split points, never the result.
+  * `repartitionByRange` affects the split points, never the result, as
+  * long as every reader sees the same split: the range-partitioned frame
+  * is local-checkpointed, so the totals and the rows they offset read one
+  * evaluated partitioning whether or not the planner reuses the exchange.
   * Boundaries are computed once on the driver, so task retries see a
   * fixed row→partition mapping (no SPARK-38388-style repartition
   * hazard).
@@ -62,8 +65,13 @@ private[graft] object TwoPass {
     * aggregate, never a second scan of `df`. */
   private def withPidOffsets(df: DataFrame, keys: Seq[Column],
       perPartition: Column, out: String, withTotal: Boolean = false): DataFrame = {
+    // Checkpointed: the totals and the final join both read `ranged`, and
+    // without exchange reuse each branch would plan its own range exchange
+    // with its own sampled boundaries; the checkpoint makes both read one
+    // evaluated partitioning
     val ranged = df.repartitionByRange(keys: _*)
       .withColumn(Pid, spark_partition_id())
+      .localCheckpoint(false)
     val totals = ranged.groupBy(col(Pid)).agg(perPartition.as("__tp_tot"))
     // exclusive offsets without a window: pair the ≤ P partition totals
     // with themselves (P² tiny rows), sum the STRICTLY-PRECEDING side per

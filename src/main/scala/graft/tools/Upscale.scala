@@ -133,13 +133,7 @@ object Upscale {
     val Array(inDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
     require(!outDir.startsWith("/root/testdata"), "refusing to write into the read-only fixtures")
-    val spark = SparkSession.builder()
-      .master(s"local[$Cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(s"local[$Cpus]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     keyCols.keys.toSeq.sorted.foreach { t =>
       upscaled(spark, inDir, t, copies)

@@ -45,9 +45,8 @@ class DeterminismSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       probes.map { q =>
-        // reset module memos so each configuration truly recomputes
-        queries.DedupQueries.reset()
-        queries.GraphQueries.reset()
+        // free cross-query state so each configuration truly recomputes
+        Session.reset(spark)
         q -> SparkEntry.queries(q)(spark, sf).collect().toSeq.map(_.toString)
       }.toMap
     } finally spark.conf.set("spark.sql.shuffle.partitions", saved)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{JobCounter, SparkEntry, SparkSpec, Tables}
+import graft.{JobCounter, Session, SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
 
 /** `GraphQueries.minLabelPropagation` — the pair-RDD rounds behind
@@ -75,8 +75,7 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("graph_components at sf0.001 runs one job per propagation round") {
-    Tables.reset()
-    GraphQueries.reset()
+    Session.reset(spark)
     val (df, jobs) = JobCounter.count(spark)(SparkEntry.queries("graph_components")(spark, sf))
     // the edge set's two distinct exchanges run as AQE jobs; then one job
     // partitions the edges with round 1 folded in, and one job runs each
@@ -84,6 +83,5 @@ class LabelPropagationSpec extends SparkSpec {
     // confirms the fixpoint)
     assert(jobs === 2 + 1 + 2)
     assert(df.count() > 0)
-    GraphQueries.reset()
   }
 }

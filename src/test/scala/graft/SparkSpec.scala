@@ -13,13 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * one extra attempt first, same as `spark.task.maxFailures` on a cluster.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
+  lazy val spark: SparkSession = Session.builder("local[4, 2]", "4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .withExtensions(new graft.plans.GraftExtensions)

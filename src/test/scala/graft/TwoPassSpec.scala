@@ -43,18 +43,37 @@ class TwoPassSpec extends SparkSpec {
     assert(tp.toSeq == (1L to 6L))
   }
 
-  test("registry hybrids: forced two-pass path ≡ classic window path") {
-    val names = Seq("layout_pruning_stats", "q_histogram_equidepth",
-      "pipeline_token_budget", "pipeline_e2e_curation", "graph_hits")
-    names.foreach { n =>
+  private val hybrids = Seq("layout_pruning_stats", "q_histogram_equidepth",
+    "pipeline_token_budget", "pipeline_e2e_curation", "graph_hits")
+
+  /** Each registry hybrid's classic-window answer against its forced
+    * two-pass answer, the latter computed under the extra `confs`. */
+  private def assertPathsAgree(confs: Map[String, String]): Unit =
+    hybrids.foreach { n =>
       spark.conf.unset(TwoPass.SmallInputLimitKey)
       val classic = SparkEntry.queries(n)(spark, sf).collect().map(_.toString)
-      spark.conf.set(TwoPass.SmallInputLimitKey, "0")
+      (confs + (TwoPass.SmallInputLimitKey -> "0")).foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val twopass = SparkEntry.queries(n)(spark, sf).collect().map(_.toString)
         assert(classic.sameElements(twopass), s"path drift for $n")
-      } finally spark.conf.unset(TwoPass.SmallInputLimitKey)
+      } finally (confs.keySet + TwoPass.SmallInputLimitKey).foreach(spark.conf.unset)
     }
+
+  test("registry hybrids: forced two-pass path ≡ classic window path") {
+    assertPathsAgree(Map.empty)
+  }
+
+  test("two-pass path is exact without exchange reuse under lossy range sampling") {
+    // Every plan branch that reads the range-partitioned frame gets its own
+    // exchange and its own rdd-id-seeded sample; two samples of 2 rows per
+    // partition disagree on the boundaries, so the partition totals and
+    // the rows they offset must come from one evaluated partitioning. AQE
+    // would coalesce a fixture's range partitions into one, where any
+    // boundaries agree; past the size gate they stay apart.
+    assertPathsAgree(Map(
+      "spark.sql.exchange.reuse" -> "false",
+      "spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
   }
 
   test("exclusivePrefixSum ≡ sum window minus own value, desc order") {
