@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.plans.Fnv1a64
+import graft.queries.Fixpoint.dropStats
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -20,8 +21,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * and checkpointed once and re-used by every round, each round's labels
   * are local-checkpointed and the previous round's released, and
   * min-label propagation converges in O(component diameter) rounds
-  * regardless of cluster size. The other iterative queries here run
-  * DataFrame rounds truncated by lazy `localCheckpoint`s.
+  * regardless of cluster size. Its loop and those of bfs, sssp,
+  * dag_layers, kcore and ktruss run on `Fixpoint.run`; the DataFrame
+  * rounds among them are truncated by lazy `localCheckpoint`s.
   */
 object GraphQueries {
 
@@ -100,19 +102,15 @@ object GraphQueries {
     * round's labels are `localCheckpoint`ed — materialized by the probe
     * in the same job — and the previous round's blocks released once
     * the new ones exist. On a cluster use reliable checkpoints against
-    * the DFS instead. Batching several rounds into one job (the dagLayers
-    * self-loop device) was measured slower on the earlier DataFrame round
-    * at sf0.1 (r11: 4.3 s round-at-a-time vs 7.7-8.3 s batched) and has
-    * not been re-measured on these rounds.
+    * the DFS instead. Batching several rounds into one job (the
+    * `Fixpoint.relax` self-loop device) was measured slower on the
+    * earlier DataFrame round at sf0.1 (r11: 4.3 s round-at-a-time vs
+    * 7.7-8.3 s batched) and has not been re-measured on these rounds.
     */
   private[queries] def minLabelPropagation(und: DataFrame, maxIter: Int): DataFrame = {
     // The oracle (recursive CTE) computes the TRUE fixpoint; returning
     // partially-propagated labels on a graph whose diameter exceeds the
     // iteration budget would silently diverge from it. Fail loudly instead.
-    def exhausted = new IllegalStateException(
-      s"min-label propagation did not converge within $maxIter iterations" +
-        " — raise maxIter (component diameter exceeds the budget)")
-    if (maxIter < 1) throw exhausted
     val s = und.sparkSession
     val pairs = und.select(col("u").cast("long"), col("v").cast("long"))
       .queryExecution.toRdd.map { r =>
@@ -128,11 +126,8 @@ object GraphQueries {
       Iterator((a, a.firstLabels))
     }, preservesPartitioning = true).localCheckpoint()
     val adj = base.mapPartitions(_.map(_._1), preservesPartitioning = true)
-    var labels = base.mapPartitions(_.map(_._2), preservesPartitioning = true)
-    var lastSum = labelSum(labels) // round 1
-    var converged = false
-    var i = 1
-    while (!converged && i < maxIter) {
+    val round1 = base.mapPartitions(_.map(_._2), preservesPartitioning = true)
+    val run = Fixpoint.run(round1, maxIter - 1, seed = Some(labelSum(round1))) { (labels, _) =>
       val msgs = adj.zipPartitions(labels)((a, l) => only(a).messages(only(l)))
         .partitionBy(part)
       val next = adj.zipPartitions(labels, msgs) { (a, l, m) =>
@@ -140,13 +135,13 @@ object GraphQueries {
       }.localCheckpoint()
       val sum = labelSum(next)
       labels.unpersist(blocking = false)
-      labels = next
-      converged = sum == lastSum
-      lastSum = sum
-      i += 1
+      (next, sum)
     }
-    if (!converged) throw exhausted
-    val rows = adj.zipPartitions(labels) { (a, l) =>
+    if (!run.converged)
+      throw new IllegalStateException(
+        s"min-label propagation did not converge within $maxIter iterations" +
+          " — raise maxIter (component diameter exceeds the budget)")
+    val rows = adj.zipPartitions(run.state) { (a, l) =>
       val (vtx, comp) = (only(a).vtx, only(l).comp)
       Iterator.tabulate(vtx.length)(k => Row(vtx(k), comp(k)))
     }
@@ -452,63 +447,30 @@ object GraphQueries {
     * loop (after CC and PageRank), with frontier semantics expressed as
     * monotone relaxation: distances only decrease, vertices only appear,
     * so the (count, sum) pair is the convergence invariant (stable ⇔
-    * fixpoint), one aggregate job per round. Lazy localCheckpoint per
-    * iteration as in CC. Fails loudly if not converged inside maxIter —
+    * fixpoint). Rounds run in `Fixpoint.relax` batches of k = 3 (r12,
+    * sf0.1, same-JVM interleaved: 3.0-3.3 s round-at-a-time → 2.5-2.7 s,
+    * answer-identical). Fails loudly if not converged inside maxIter —
     * the oracle (recursive CTE, dist bounded by the same budget) computes
     * the true bounded fixpoint, and silently-partial distances would
-    * diverge from it. Unreached vertices are absent (not null-distance).
-    * Convergence is probed only at batch boundaries (every k = 3 rounds,
-    * below), and proving a fixpoint takes a whole batch that changes
-    * nothing. So with a custom `maxIter` a run can throw where a
-    * per-round probe would have converged inside the same budget; the
-    * default 30 leaves ample room on every fixture.
+    * diverge from it. Convergence is only seen at batch boundaries (see
+    * `Fixpoint`), so a custom `maxIter` can throw where a per-round probe
+    * would have converged. Unreached vertices are absent (not
+    * null-distance).
     */
   def bfs(s: SparkSession, d: String, maxIter: Int = 30): DataFrame = {
     val e = edges(s, d).localCheckpoint(false)
-    // r12 (guide §1.2; the dagLayers device, min-plus flavor): rounds run
-    // batchK = 3 to a materialized job via weight-0 self-loop augmentation
-    // — each in-plan round references the carried dist exactly ONCE
-    // (min(dist+w) over eAug ≡ the union+min recurrence), so the lazy
-    // plan stays a linear chain. The r11 rejection stands for DEEP
-    // batches: k = 9 measured 7.4-9.4 s vs 3.4-4.0 s round-at-a-time,
-    // because 2 batches execute 18 in-plan rounds against a ~7-round
-    // fixpoint and per-STAGE fixed costs (~0.3-0.5 s/round at sf0.1)
-    // dwarf the job-launch latency saved. k = 3 overshoots by ≤ 2 rounds
-    // and measured 3.0-3.3 → 2.5-2.7 s same-JVM interleaved (r12),
-    // answer-identical (monotone + idempotent; batch state (count, sum)
-    // stable ⇔ fixpoint, the same probe as before). k divides maxIter, so
-    // the contractual 30-round budget is never exceeded.
-    val batchK = 3
     val eAug = e.select(col("u"), col("v"), lit(1).as("w"))
       .union(e.select(col("u")).distinct()
         .select(col("u"), col("u").as("v"), lit(0).as("w")))
       .localCheckpoint(false)
-    var dist = e.select(col("u").as("vtx")).filter(col("vtx") < 10)
+    val sources = e.select(col("u").as("vtx")).filter(col("vtx") < 10)
       .distinct().withColumn("dist", lit(0)).localCheckpoint(false)
-    var converged = false
-    var done = 0
-    var last = (-1L, Long.MinValue)
-    while (!converged && done < maxIter) {
-      val k = math.min(batchK, maxIter - done)
-      var cur = dist
-      for (_ <- 1 to k) {
-        cur = eAug.join(cur, eAug("u") === cur("vtx"))
-          .groupBy(eAug("v").as("vtx"))
-          .agg(min(cur("dist") + col("w")).as("dist"))
-          .select(col("vtx"), col("dist"))
-      }
-      dist = dropStats(s, cur.localCheckpoint(false))
-      val row = dist.agg(count(lit(1)),
-        coalesce(sum(col("dist")), lit(0L))).collect()(0)
-      val c = (row.getLong(0), row.getLong(1))
-      converged = c == last
-      last = c
-      done += k
-    }
-    if (!converged)
+    val run = Fixpoint.run(sources, maxIter, batch = 3)(
+      Fixpoint.relax(eAug, _, "dist", min, _))
+    if (!run.converged)
       throw new IllegalStateException(
         s"BFS did not converge within $maxIter iterations — raise maxIter")
-    dist.select(col("vtx"), col("dist").cast("int").as("dist")).orderBy("vtx")
+    run.state.select(col("vtx"), col("dist").cast("int").as("dist")).orderBy("vtx")
   }
 
   /** k-core decomposition (k = 5): synchronously peel every vertex whose
@@ -516,7 +478,7 @@ object GraphQueries {
     * within-core degree. Each round is one degree aggregate plus two
     * semi-joins — linear in surviving edges — with a lazy localCheckpoint
     * truncating lineage and the round's edge count doubling as the
-    * convergence probe (peeling strictly removes edges, so equal
+    * `Fixpoint` probe (peeling strictly removes edges, so equal
     * consecutive counts ⇔ fixpoint; one job per round). The fixture needs
     * 5 rounds at sf0.01, 1 at sf0.1, and peels to EMPTY at sf0.001 — all
     * three land on the oracle's 8-round unrolled fixpoint because
@@ -527,29 +489,34 @@ object GraphQueries {
     * size, bounds the round count; every round's shuffle shrinks.
     */
   def kcore(s: SparkSession, d: String, k: Int = 5, maxIter: Int = 30): DataFrame = {
-    var e = edges(s, d).localCheckpoint(false)
-    var lastCount = -1L
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val run = Fixpoint.run(edges(s, d).localCheckpoint(false), maxIter) { (e, _) =>
       val keep = e.groupBy("u").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("u")
       val next = e.join(keep, Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
         .select("u", "v")
         .localCheckpoint(false)
-      val c = next.count()
-      converged = c == lastCount
-      lastCount = c
-      e = next
-      i += 1
+      (next, next.count())
     }
-    if (!converged)
+    if (!run.converged)
       throw new IllegalStateException(
         s"k-core peel did not converge within $maxIter rounds")
-    e.groupBy(col("u").as("vtx")).agg(count(lit(1)).as("core_degree"))
+    run.state.groupBy(col("u").as("vtx")).agg(count(lit(1)).as("core_degree"))
       .orderBy("vtx")
   }
+
+  /** Driver budget for Borůvka's per-round merge-graph contraction — the
+    * `dedupClusters` localCap sibling. Fixture merge graphs are thousands
+    * of rows; a true cluster-scale first round falls back to the
+    * distributed pointer doubling. Cost arithmetic (r12, honest version
+    * of the r11 "raw longs" undersell): the collect materializes one
+    * specialized (Long, Long) tuple per row (~48 B with header + array
+    * slot) plus two boxed-key HashMaps in the walk (~100 B/entry), so the
+    * 1M cap budgets ~150 MB of transient driver heap — comfortable in
+    * the 16 GB driver, and the hybrid's flip point stays far above every
+    * fixture merge graph (geometric shrink makes later cluster-scale
+    * rounds driver-sized exactly as before). */
+  private val MsfMergeLocalCap = 1000000
 
   /** Borůvka minimum spanning forest — the classic distributed-MST
     * algorithm (each component hooks its minimum incident edge, chosen
@@ -586,32 +553,6 @@ object GraphQueries {
     * aggregate on (long, long, long) rows; per-round state is one label
     * per vertex and one candidate edge per component. A cluster port
     * swaps localCheckpoint for reliable checkpoints (pagerank note). */
-  /** Re-base `df` onto a fresh LogicalRDD with NO inherited statistics.
-    * localCheckpoint truncates the logical plan but PRESERVES the origin
-    * plan's size estimate, and Catalyst's join estimation MULTIPLIES
-    * child sizes — so an iterative join loop compounds the estimate
-    * round over round until the BigInt's digit count itself grows
-    * exponentially and the driver spends minutes inside
-    * BigInteger.multiply (observed: rounds 0-2 sub-second, round 4+
-    * 25 s/job, all in stats math, zero executor work). Dropping the
-    * stats at each round boundary caps every round's estimate at one
-    * round's worth of joins over unknown-size leaves. */
-  private def dropStats(s: SparkSession, df: DataFrame): DataFrame =
-    s.createDataFrame(df.rdd, df.schema)
-
-  /** Driver budget for Borůvka's per-round merge-graph contraction — the
-    * `dedupClusters` localCap sibling. Fixture merge graphs are thousands
-    * of rows; a true cluster-scale first round falls back to the
-    * distributed pointer doubling. Cost arithmetic (r12, honest version
-    * of the r11 "raw longs" undersell): the collect materializes one
-    * specialized (Long, Long) tuple per row (~48 B with header + array
-    * slot) plus two boxed-key HashMaps in the walk (~100 B/entry), so the
-    * 1M cap budgets ~150 MB of transient driver heap — comfortable in
-    * the 16 GB driver, and the hybrid's flip point stays far above every
-    * fixture merge graph (geometric shrink makes later cluster-scale
-    * rounds driver-sized exactly as before). */
-  private val MsfMergeLocalCap = 1000000
-
   def boruvkaMsf(s: SparkSession, d: String, maxRounds: Int = 20): DataFrame = {
     val und = edges(s, d)
     val us = least(col("u"), col("v"))
@@ -712,7 +653,7 @@ object GraphQueries {
           import s.implicits._
           val mapping = local.map(r => (r._1, find(r._1))).toSeq
             .toDF("comp", "newc")
-          labels = dropStats(s, labels
+          labels = dropStats(labels
             .join(broadcast(mapping), Seq("comp"), "left")
             .select(col("vtx"), coalesce(col("newc"), col("comp")).as("comp"))
             .localCheckpoint(false))
@@ -745,7 +686,7 @@ object GraphQueries {
             p = next.select(col("c"), col("p"))
             stable = changed == 0L
           }
-          labels = dropStats(s, labels
+          labels = dropStats(labels
             .join(p.select(col("c").as("comp"), col("p").as("newc")),
               Seq("comp"), "left")
             .select(col("vtx"), coalesce(col("newc"), col("comp")).as("comp"))
@@ -770,63 +711,28 @@ object GraphQueries {
     * unrolls the identical rounds as chained CTEs, the pagerank device),
     * so the gate never depends on a convergence argument — and the spec
     * separately proves round rounds+1 changes nothing at two SFs, i.e.
-    * the fixture answer IS the true fixpoint. Fixed rounds mean ONE job:
-    * per-round lazy checkpoints truncate lineage and `dropStats` blocks
-    * the compounding-statistics trap (see boruvkaMsf). Scale: each round
-    * is one keyed shuffle join + min-aggregate over (long, long) rows;
-    * state is one distance per reached vertex. */
+    * the fixture answer IS the true fixpoint. Rounds run in
+    * `Fixpoint.relax` batches of k = 5, one checkpoint and one eager
+    * (count, sum) probe per batch (r12, sf0.1, same-JVM interleaved:
+    * 5.9-7.3 s round-at-a-time → 4.4-5.0 s, identical 18 008-row output;
+    * the fixture fixpoint lands at round 15 of 20). A repeated probe means
+    * every later contractual round repeats verbatim, so stopping there
+    * is bit-identical to the 20-round definition the oracle unrolls.
+    * Scale: each round is one keyed shuffle join + min-aggregate over
+    * (long, long) rows; state is one distance per reached vertex. */
   def ssspBellmanFord(s: SparkSession, d: String, rounds: Int = 20): DataFrame = {
     val und = edges(s, d)
     val w = Fnv1a64.ihash31(concat(least(col("u"), col("v")).cast("string"),
       lit("|"), greatest(col("u"), col("v")).cast("string"))) % 1000L + 1L
     val e = und.select(col("u"), col("v"), w.as("w")).localCheckpoint(false)
-    // r12 (guide §1.2; the dagLayers device, min-plus flavor): relaxation
-    // rounds run batchK = 5 to a materialized job via weight-0 self-loop
-    // augmentation — min(dist + w) over eAug references the carried dist
-    // exactly ONCE per in-plan round, which IS the union+min recurrence
-    // (self-loop carries each reached vertex's current dist; in-edges
-    // contribute relaxations), so the lazy plan is a linear chain, never
-    // the 2^k unroll. Measured same-JVM interleaved at sf0.1 (r12):
-    // 5.9-7.3 s round-at-a-time → 4.4-5.0 s batched, identical 18 008-row
-    // output. The fixture fixpoint lands at round 15 of the 20-round
-    // budget, so k = 5 overshoots by at most one batch; k divides the
-    // budget, so a non-converged run still executes exactly `rounds`.
-    val batchK = 5
     val eAug = e.union(e.select(col("u")).distinct()
         .select(col("u"), col("u").as("v"), lit(0L).as("w")))
       .localCheckpoint(false)
-    var dist = e.select(col("u").as("vtx")).distinct()
+    val sources = e.select(col("u").as("vtx")).distinct()
       .filter(col("vtx") < 10).withColumn("dist", lit(0L))
       .localCheckpoint(false)
-    // Fixpoint short-circuit under the fixed-rounds contract: the reached
-    // set only GROWS and distances only DECREASE, so an unchanged
-    // (count, sum) pair means the batch was a no-op — and relaxation is
-    // deterministic, so every later contractual round repeats verbatim.
-    // The skipped rounds' outputs are replayed by doing nothing; the
-    // result is bit-identical to the 20-round definition the oracle
-    // unrolls. The per-batch aggregate also materializes each lazy
-    // checkpoint (the anti-stack-overflow guard).
-    var lastState = (-1L, Long.MinValue)
-    var converged = false
-    var done = 0
-    while (!converged && done < rounds) {
-      val k = math.min(batchK, rounds - done)
-      var cur = dist
-      for (_ <- 1 to k) {
-        cur = eAug.join(cur, eAug("u") === cur("vtx"))
-          .groupBy(eAug("v").as("vtx"))
-          .agg(min(cur("dist") + col("w")).as("dist"))
-          .select(col("vtx"), col("dist"))
-      }
-      dist = dropStats(s, cur.localCheckpoint(false))
-      val row = dist.agg(count(lit(1)),
-        coalesce(sum(col("dist")), lit(0L))).collect()(0)
-      val cr = (row.getLong(0), row.getLong(1))
-      converged = cr == lastState
-      lastState = cr
-      done += k
-    }
-    dist.orderBy("vtx")
+    Fixpoint.run(sources, rounds, batch = 5)(Fixpoint.relax(eAug, _, "dist", min, _))
+      .state.orderBy("vtx")
   }
 
   /** Dense co-purchase graph: distinct part pairs sharing an even-keyed
@@ -865,7 +771,7 @@ object GraphQueries {
     * row for a zero-support edge, so the vacuous k ≤ 2 thresholds (which
     * should keep every edge) are inexpressible here. Scale: support state
     * is one long per live edge; per-round lazy checkpoints + dropStats
-    * block the compounding-statistics trap (see boruvkaMsf). */
+    * block the compounding-statistics trap (see `Fixpoint.dropStats`). */
   def ktruss(s: SparkSession, d: String, k: Int = 8, rounds: Int = 8): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3 (zero-support edges drop), got $k")
     import s.implicits._
@@ -907,70 +813,60 @@ object GraphQueries {
       .toDF("vtx", "rank")
     val rfit = edgesFitBroadcast(s, nV)
     def rside(df: DataFrame): DataFrame = if (rfit) broadcast(df) else df
-    var cur = und
+    val packed = und
       .join(rside(ranked.select(col("vtx").as("u"), col("rank").as("ru"))), "u")
       .join(rside(ranked.select(col("vtx").as("v"), col("rank").as("rv"))), "v")
       .select((shiftleft(least(col("ru"), col("rv")), 32) +
         greatest(col("ru"), col("rv"))).as("pk"))
       .localCheckpoint(false)
-    // measured edge count drives the per-round broadcast gate below; the
-    // up-front count just materializes the checkpoint round 1 was about
-    // to pay, so the measurement is free
-    var nCur = cur.count()
-    // eager per-round counts buy the fixpoint short-circuit: the peel is
-    // MONOTONE (e_r ⊆ e_{r-1}), so equal consecutive counts ⇒ equal edge
-    // sets ⇒ every later round repeats verbatim — at sf0.1 the fixture
-    // converges in 2 of the 8 contractual rounds, so 6 wedge enumerations
-    // are replaced by replaying the converged count (semantics unchanged:
-    // the output IS the fixed-8-round curve either way)
-    val counts = scala.collection.mutable.Buffer.empty[Long]
-    var prev = -1L
-    var converged = false
-    for (_ <- 1 to rounds) {
-      if (converged) counts += prev
-      else {
-        // wedge side 2 AND the closing edge set broadcast ONLY while the
-        // measured edge count fits the budget (edgesFitBroadcast — the
-        // peel's shrinking sets always do at fixture decades, so the
-        // whole round runs map-side off one scan of cur until the single
-        // support shuffle); past the budget the hints are dropped and
-        // the joins shuffle on their keys (a, then wpk) as HASH joins —
-        // the build sides stay narrow packed longs while the probe side
-        // is the grand wedge stream, so a sort-merge join's probe-side
-        // sort is pure waste (sf10 probe: SMJ 131 s vs SHJ 46 s on the
-        // closing join) — the plan that degrades instead of OOMing at a
-        // 100× scale-up.
-        // A wedge (a→y, a→z, y<z in rank order) closed by edge y→z
-        // credits its three edges as PACKED LONGS — (a,y), (a,z), (y,z)
-        // are already low→high in the fixed rank order, so each credit
-        // is one shift+or and the support aggregate keys on a single
-        // primitive long.
-        val fit = edgesFitBroadcast(s, nCur)
-        def side(df: DataFrame): DataFrame =
-          if (fit) broadcast(df) else df.hint("SHUFFLE_HASH")
-        val e = cur.select(shiftright(col("pk"), 32).as("a"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("b"))
-        val credits = e.select(col("a"), col("b").as("y"))
-          .join(side(e.select(col("a").as("a2"), col("b").as("z"))),
-            col("a") === col("a2") && col("y") < col("z"))
-          .select(col("a"), col("y"), col("z"),
-            (shiftleft(col("y"), 32) + col("z")).as("wpk"))
-          .join(side(cur.select(col("pk").as("wpk"))), "wpk")
-          .select(explode(array(
-            shiftleft(col("a"), 32) + col("y"),
-            shiftleft(col("a"), 32) + col("z"),
-            col("wpk"))).as("pk"))
-        val sup = credits.groupBy("pk").agg(count(lit(1)).as("s"))
-        cur = dropStats(s, sup.filter(col("s") >= k - 2)
-          .select("pk").localCheckpoint(false))
-        val n = cur.count()
-        converged = n == prev
-        prev = n
-        nCur = n
-        counts += n
-      }
+    // the state carries the measured edge count that drives the per-round
+    // broadcast gate below; the up-front count just materializes the
+    // checkpoint round 1 was about to pay, so the measurement is free.
+    // The per-round counts are the `Fixpoint` probe: the peel is MONOTONE
+    // (e_r ⊆ e_{r-1}), so equal consecutive counts ⇒ equal edge sets ⇒
+    // every later round repeats verbatim — at sf0.1 the fixture converges
+    // in 2 of the 8 contractual rounds, so 6 wedge enumerations are
+    // replaced by replaying the converged count (the output IS the
+    // fixed-8-round curve either way)
+    val run = Fixpoint.run((packed, packed.count()), rounds) { case ((cur, nCur), _) =>
+      // wedge side 2 AND the closing edge set broadcast ONLY while the
+      // measured edge count fits the budget (edgesFitBroadcast — the
+      // peel's shrinking sets always do at fixture decades, so the
+      // whole round runs map-side off one scan of cur until the single
+      // support shuffle); past the budget the hints are dropped and
+      // the joins shuffle on their keys (a, then wpk) as HASH joins —
+      // the build sides stay narrow packed longs while the probe side
+      // is the grand wedge stream, so a sort-merge join's probe-side
+      // sort is pure waste (sf10 probe: SMJ 131 s vs SHJ 46 s on the
+      // closing join) — the plan that degrades instead of OOMing at a
+      // 100× scale-up.
+      // A wedge (a→y, a→z, y<z in rank order) closed by edge y→z
+      // credits its three edges as PACKED LONGS — (a,y), (a,z), (y,z)
+      // are already low→high in the fixed rank order, so each credit
+      // is one shift+or and the support aggregate keys on a single
+      // primitive long.
+      val fit = edgesFitBroadcast(s, nCur)
+      def side(df: DataFrame): DataFrame =
+        if (fit) broadcast(df) else df.hint("SHUFFLE_HASH")
+      val e = cur.select(shiftright(col("pk"), 32).as("a"),
+        col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("b"))
+      val credits = e.select(col("a"), col("b").as("y"))
+        .join(side(e.select(col("a").as("a2"), col("b").as("z"))),
+          col("a") === col("a2") && col("y") < col("z"))
+        .select(col("a"), col("y"), col("z"),
+          (shiftleft(col("y"), 32) + col("z")).as("wpk"))
+        .join(side(cur.select(col("pk").as("wpk"))), "wpk")
+        .select(explode(array(
+          shiftleft(col("a"), 32) + col("y"),
+          shiftleft(col("a"), 32) + col("z"),
+          col("wpk"))).as("pk"))
+      val sup = credits.groupBy("pk").agg(count(lit(1)).as("s"))
+      val next = dropStats(sup.filter(col("s") >= k - 2)
+        .select("pk").localCheckpoint(false))
+      val n = next.count()
+      ((next, n), n)
     }
-    counts.toSeq.zipWithIndex
+    run.probes.padTo(rounds, run.state._2).zipWithIndex
       .map { case (n, i) => (i + 1, n) }
       .toDF("round", "n_edges")
       .orderBy("round")
@@ -983,10 +879,13 @@ object GraphQueries {
     * relaxation with the fixed-round contract (45 rounds ≥ the 40-deep
     * sf0.001 fixture; the spec proves round 46 changes nothing, and the
     * relaxation is monotone non-decreasing so extra rounds are
-    * idempotent). All-lazy checkpoints — one job for 45 rounds (the
-    * pagerank device) — with dropStats against the compounding-stats
-    * trap. Output is the decision-sized layer histogram. Scale: each
-    * round one keyed join + max-aggregate over (long, int) rows.
+    * idempotent). Rounds run in `Fixpoint.relax` batches of k = 9, one
+    * checkpoint and one eager (count, sum) probe per batch, stopping at the
+    * first repeated probe (r11: the per-round job launch, checkpoint and
+    * probe, ~0.2 s each, dominated the 10.6 s round-at-a-time wall at
+    * sf0.1, where the data work of all rounds is ~2 s). Output is the
+    * decision-sized layer histogram. Scale: each round one keyed join +
+    * max-aggregate over (long, int) rows.
     */
   def dagLayers(s: SparkSession, d: String, rounds: Int = 45): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -996,53 +895,13 @@ object GraphQueries {
       .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
       .agg(count(lit(1)).as("w")).filter(col("w") >= 2).select("u", "v")
       .localCheckpoint(false)
-    var layer = e.select(col("u").as("vtx")).union(e.select(col("v").as("vtx")))
+    val layer0 = e.select(col("u").as("vtx")).union(e.select(col("v").as("vtx")))
       .distinct().withColumn("layer", lit(0)).localCheckpoint(false)
-    // Eager convergence via the sum invariant (the minLabelPropagation
-    // device, flipped for max-plus: layers only ever INCREASE, so equal
-    // consecutive sums ⇔ fixpoint, and every later contractual round
-    // repeats verbatim — the ktruss short-circuit). r11 (guide §1.2/§2.6):
-    // rounds run UNROLLED IN BATCHES of 9 relaxations per materialized
-    // job — the per-round driver latency (job launch + checkpoint + a
-    // separate convergence action, ~0.2 s each on this host) dominated
-    // the measured 10.6 s wall at sf0.1, where the data work of all
-    // rounds together is ~2 s. To unroll without materializing, each
-    // round must reference the previous layer table exactly ONCE (a
-    // `union(cur, join(e, cur))` shape doubles the lazy plan per round —
-    // 2^9 recomputation, measured 4-7× SLOWER than round-at-a-time), so
-    // the carry-forward is folded into the join itself: the edge list is
-    // augmented with weight-0 self-loops over the vertex set and a round
-    // becomes one join + one max-aggregate of layer + w. Batch size 9
-    // keeps the lazy in-plan chain under pagerank's proven 10-round
-    // task-binary depth (45 all-lazy rounds overflow the executor stack
-    // at task DEserialization). Answer unchanged: max-plus relaxation
-    // with self-loops is the union+max recurrence verbatim, monotone and
-    // idempotent; the total in-plan round budget is exactly `rounds`,
-    // and overshoot within a converged batch replays the fixpoint.
     val eAug = e.select(col("u"), col("v"), lit(1).as("w"))
-      .union(layer.select(col("vtx").as("u"), col("vtx").as("v"), lit(0).as("w")))
+      .union(layer0.select(col("vtx").as("u"), col("vtx").as("v"), lit(0).as("w")))
       .localCheckpoint(false)
-    val batch = 9
-    var lastSum = -1L
-    var converged = false
-    var done = 0
-    while (done < rounds && !converged) {
-      val k = math.min(batch, rounds - done)
-      var cur = layer
-      for (_ <- 1 to k) {
-        cur = eAug.join(cur, eAug("u") === cur("vtx"))
-          .groupBy(eAug("v").as("vtx"))
-          .agg(max(cur("layer") + col("w")).as("layer"))
-          .select(col("vtx"), col("layer"))
-      }
-      layer = dropStats(s, cur.localCheckpoint(false))
-      val sm = layer.agg(coalesce(sum(col("layer")), lit(0L)))
-        .collect()(0).getLong(0)
-      converged = sm == lastSum
-      lastSum = sm
-      done += k
-    }
-    layer.groupBy("layer").agg(count(lit(1)).as("n_vertices")).orderBy("layer")
+    Fixpoint.run(layer0, rounds, batch = 9)(Fixpoint.relax(eAug, _, "layer", max, _))
+      .state.groupBy("layer").agg(count(lit(1)).as("n_vertices")).orderBy("layer")
   }
 
   private def dagLayersSql(rounds: Int): String = {
@@ -1119,9 +978,9 @@ object GraphQueries {
           .select(col(key), round(col(v) / col(mx) * 1000000.0).cast("long").as(v))
     for (_ <- 1 to rounds) {
       val aRaw = e.join(hub, "p").groupBy("sv").agg(sum(col("h")).as("a"))
-      auth = dropStats(s, renorm(aRaw, "sv", "a", "am").localCheckpoint(false))
+      auth = dropStats(renorm(aRaw, "sv", "a", "am").localCheckpoint(false))
       val hRaw = e.join(auth, "sv").groupBy("p").agg(sum(col("a")).as("h"))
-      hub = dropStats(s, renorm(hRaw, "p", "h", "hm").localCheckpoint(false))
+      hub = dropStats(renorm(hRaw, "p", "h", "hm").localCheckpoint(false))
     }
     hub.select(col("p").as("vtx"), lit("hub").as("kind"),
         round(col("h") / 1000000.0, 6).as("score"))

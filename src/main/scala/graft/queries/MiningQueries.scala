@@ -78,32 +78,30 @@ object MiningQueries {
       .select(col("u").as("vtx"), col("nlbl").as("lbl"))
   }
 
-  /** Community detection by THREE synchronous label-propagation rounds over
-    * the part↔supplier graph (same edge set as graph_components, so
-    * communities refine those components). Each round is one join + one
-    * count aggregate + one per-vertex argmax — the Pregel superstep as
-    * dataflow. Rounds are unrolled (not run to fixpoint) so the DuckDB
-    * oracle can restate them as three chained CTEs; the fixpoint form
-    * would reuse graph_components' localCheckpoint loop.
-    *
-    * Scale: per-round cost is |E| join + |E| aggregate, hash-partitioned
-    * on vertex id; the argmax window partitions by vertex (no global
-    * sort). Synchronous LPA on 100 TB graphs is exactly this loop with
-    * checkpoint-every-5 lineage truncation.
-    */
   /** The converged (vtx, lbl) table after `rounds` synchronous LPA
     * rounds — shared by the labeling query and the modularity scorer. */
   private def lpaLabels(s: SparkSession, d: String, rounds: Int): DataFrame = {
     // 3 unrolled rounds keep the plan shallow enough to stay declarative;
-    // Spark's ReuseExchange dedupes the identical edge subtrees. A
-    // fixpoint variant would persist edges + localCheckpoint per round
-    // like GraphQueries.connectedComponents.
+    // Spark's ReuseExchange dedupes the identical edge subtrees.
     val e = GraphQueries.edges(s, d)
     val l0 = e.select(col("u").as("vtx")).distinct()
       .withColumn("lbl", col("vtx"))
     (1 to rounds).foldLeft(l0)((l, _) => lpaRound(e, l))
   }
 
+  /** Community detection by THREE synchronous label-propagation rounds over
+    * the part↔supplier graph (same edge set as graph_components, so
+    * communities refine those components). Each round is one join + one
+    * count aggregate + one per-vertex argmax — the Pregel superstep as
+    * dataflow. Rounds are unrolled (not run to fixpoint) so the DuckDB
+    * oracle can restate them as three chained CTEs; the fixpoint form
+    * would run on `Fixpoint.run`, as graph_components does.
+    *
+    * Scale: per-round cost is |E| join + |E| aggregate, hash-partitioned
+    * on vertex id; the argmax window partitions by vertex (no global
+    * sort). Synchronous LPA on 100 TB graphs is exactly this loop with
+    * checkpoint-every-5 lineage truncation.
+    */
   def labelPropagation(s: SparkSession, d: String, rounds: Int = 3): DataFrame = {
     val cs = Window.partitionBy("lbl")
     lpaLabels(s, d, rounds).withColumn("csize", count(lit(1)).over(cs))
