@@ -3,27 +3,24 @@ package graft.queries
 import graft.Tables
 import graft.plans.Fnv1a64
 import graft.queries.Fixpoint.dropStats
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Iterative graph computation — connected components by min-label
   * propagation, the Pregel-shaped workload a MapReduce lineage engine should
   * express (the reference stops at single-pass vertex degree,
   * /root/reference/src/app/vertex_degree.rs).
   *
-  * Each round of the components loop is one Spark job of two stages over
-  * pair RDDs that share one hash partitioner (see `minLabelPropagation`);
-  * the driver only sees a scalar convergence sum. Edges are partitioned
-  * and checkpointed once and re-used by every round, each round's labels
-  * are local-checkpointed and the previous round's released, and
-  * min-label propagation converges in O(component diameter) rounds
-  * regardless of cluster size. Its loop and those of bfs, sssp,
-  * dag_layers, kcore and ktruss run on `Fixpoint.run`; the DataFrame
-  * rounds among them are truncated by lazy `localCheckpoint`s.
+  * Components, bfs, sssp and dag_layers are one min/max-plus propagation,
+  * `Fixpoint.propagate`: one Spark job per round over pair RDDs that
+  * share one hash partitioner, only vertices whose value moved sending,
+  * and the driver seeing only a (count, sum) convergence probe. The
+  * edges are partitioned and checkpointed once and re-used by every
+  * round, each round's values are local-checkpointed and the previous
+  * round's released, and propagation converges in O(diameter) rounds
+  * regardless of cluster size. kcore and ktruss run DataFrame rounds on
+  * `Fixpoint.run`, truncated by lazy `localCheckpoint`s.
   */
 object GraphQueries {
 
@@ -32,28 +29,17 @@ object GraphQueries {
     * lineitem graph is one giant blob — useless as a test).
     */
   private[queries] def edges(s: SparkSession, d: String): DataFrame = {
-    // r12 (guide §2.4): ONE canonical distinct instead of the historical
-    // two (inner pair distinct + outer distinct after symmetrization).
-    // Set algebra, valid at EVERY scale — no id-range assumption:
-    //   distinct(A ∪ rev(A)) = C ∪ rev(C \ diagonal)
-    // where C = distinct (least, greatest) canonical pairs: every
-    // undirected pair appears in C exactly once with a ≤ b, the reversed
-    // branch (a > b strictly) is DISJOINT from C by construction, and a
-    // self-loop (a = b, possible from sf≥5 where partkeys overlap
-    // s+1e6 — the r11 revert's exact hazard) is emitted exactly once by
-    // the C branch and filtered from the reversal. One exchange carries
-    // the canonical pair set; the symmetrizing union is exchange-free.
-    // Measured same-JVM interleaved at sf0.1: 3 → 2 Exchanges,
-    // 0.73-2.00 → 0.52-1.69 s per derivation, identical 118 544-row set —
-    // times ~17 graph consumers per full run.
-    //
-    // r11 note (still binding): dropping dedup OUTRIGHT on the
-    // disjoint-id-range argument was tried and REVERTED — partkeys exceed
-    // 1e6 from sf≥5, where forward (p, s+1e6) and reversed pairs CAN
-    // coincide and duplicate edges would skew the counting consumers
-    // (pagerank degrees, hits sums, modularity) against their
-    // distinct-based oracles. Dedup stays; it just costs one exchange
-    // now, not two.
+    // distinct(A ∪ rev(A)) = C ∪ rev(C \ diagonal), where C is the
+    // distinct canonical (least, greatest) pairs: every undirected pair is
+    // in C once with a ≤ b, the reversed branch (a > b) is disjoint from
+    // C, and a self-loop is emitted once, by the C branch. The plan runs
+    // two distinct exchanges, not one: the optimizer pushes the reversed
+    // branch's a ≠ b filter below its distinct, so the two branches'
+    // plans differ and neither reuses the other's exchange. The dedup
+    // itself must stay: from sf≥5 partkeys exceed 1e6 and overlap
+    // s + 1e6, so forward and reversed pairs can coincide, and duplicate
+    // edges would skew the counting consumers (pagerank degrees, hits
+    // sums, modularity) against their distinct-based oracles.
     val li = Tables.lineitem(s, d)
       .filter(col("l_partkey") % 10 === col("l_suppkey") % 10)
       .select(least(col("l_partkey"), col("l_suppkey") + 1000000L).as("a"),
@@ -78,182 +64,22 @@ object GraphQueries {
     * `(u long, v long)` (both directions present). Returns (vtx, comp)
     * with comp = min vertex id reachable. Shared by connected components
     * here and near-dup cluster resolution (PipelineQueries.dedupClusters).
-    *
-    * Vertex/edge co-partitioning, as in GraphX's Pregel: the edges are
-    * hash-partitioned on `u` once and held per partition as a CSR block
-    * (`Adjacency`), and every round's labels are one array per partition
-    * aligned with that block's vertices, so reading a vertex's label next
-    * to its out-edges is a narrow zip. A round is one job of two stages:
-    *   - map: each vertex whose label dropped last round sends it to its
-    *     neighbours, combined per target on the map side — a vertex whose
-    *     label held already delivered it, so the labels after every round
-    *     equal full propagation's and the round count is unchanged;
-    *   - reduce: the min of the messages lands on the same partitioner,
-    *     zipped with the old labels, and the label sum — the convergence
-    *     probe — is the job's action.
-    * No Catalyst, AQE or codegen work runs per round. Round 1 folds into
-    * the edge-partitioning job: the edges are symmetric, so a vertex's
-    * first label, min(u, min over its neighbours), is computed on its own
-    * partition.
-    *
-    * Convergence via the label-sum invariant: min-propagation only ever
-    * DECREASES labels, so any change strictly decreases the sum; equal
-    * consecutive sums ⇔ fixpoint (an empty graph sums to 0 twice). Each
-    * round's labels are `localCheckpoint`ed — materialized by the probe
-    * in the same job — and the previous round's blocks released once
-    * the new ones exist. On a cluster use reliable checkpoints against
-    * the DFS instead. Batching several rounds into one job (the
-    * `Fixpoint.relax` self-loop device) was measured slower on the
-    * earlier DataFrame round at sf0.1 (r11: 4.3 s round-at-a-time vs
-    * 7.7-8.3 s batched) and has not been re-measured on these rounds.
+    * One `Fixpoint.propagate` run: each vertex starts at its own id and
+    * keeps the min over its neighbours (weight 0). Min-propagation only
+    * ever lowers labels, so a repeated probe ⇔ fixpoint (an empty graph
+    * probes (0, 0) twice).
     */
   private[queries] def minLabelPropagation(und: DataFrame, maxIter: Int): DataFrame = {
     // The oracle (recursive CTE) computes the TRUE fixpoint; returning
     // partially-propagated labels on a graph whose diameter exceeds the
     // iteration budget would silently diverge from it. Fail loudly instead.
-    val s = und.sparkSession
-    val pairs = und.select(col("u").cast("long"), col("v").cast("long"))
-      .queryExecution.toRdd.map { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1), "null vertex id in the edge set")
-        (r.getLong(0), r.getLong(1))
-      }
-    // as many partitions as AQE sized the edge set into, at most the
-    // session's shuffle partitions: a small graph runs few tasks a round
-    val part = new HashPartitioner(math.max(1,
-      math.min(s.sessionState.conf.numShufflePartitions, pairs.getNumPartitions)))
-    val base = pairs.partitionBy(part).mapPartitions({ it =>
-      val a = Adjacency(it)
-      Iterator((a, a.firstLabels))
-    }, preservesPartitioning = true).localCheckpoint()
-    val adj = base.mapPartitions(_.map(_._1), preservesPartitioning = true)
-    val round1 = base.mapPartitions(_.map(_._2), preservesPartitioning = true)
-    val run = Fixpoint.run(round1, maxIter - 1, seed = Some(labelSum(round1))) { (labels, _) =>
-      val msgs = adj.zipPartitions(labels)((a, l) => only(a).messages(only(l)))
-        .partitionBy(part)
-      val next = adj.zipPartitions(labels, msgs) { (a, l, m) =>
-        Iterator(only(a).receive(only(l), m))
-      }.localCheckpoint()
-      val sum = labelSum(next)
-      labels.unpersist(blocking = false)
-      (next, sum)
-    }
+    val run = Fixpoint.propagate(und.select(col("u"), col("v"), lit(0L).as("w")),
+      Some(_), Fixpoint.Min, symmetric = true, maxIter)
     if (!run.converged)
       throw new IllegalStateException(
         s"min-label propagation did not converge within $maxIter iterations" +
           " — raise maxIter (component diameter exceeds the budget)")
-    val rows = adj.zipPartitions(run.state) { (a, l) =>
-      val (vtx, comp) = (only(a).vtx, only(l).comp)
-      Iterator.tabulate(vtx.length)(k => Row(vtx(k), comp(k)))
-    }
-    s.createDataFrame(rows, new StructType().add("vtx", LongType).add("comp", LongType))
-  }
-
-  /** A partition's single block. Draining the iterator releases the
-    * cached block's read lock as soon as it is taken. */
-  private def only[T](it: Iterator[T]): T = {
-    val x = it.next()
-    require(!it.hasNext, "one block per partition")
-    x
-  }
-
-  private def labelSum(labels: RDD[Labels]): Long =
-    labels.map { l =>
-      var t = 0L
-      l.comp.foreach(t += _)
-      t
-    }.fold(0L)(_ + _)
-
-  /** One partition's labels, aligned with its `Adjacency.vtx`, and the
-    * vertices whose label dropped in the round that produced them. */
-  private final class Labels(val comp: Array[Long], val changed: java.util.BitSet)
-      extends Serializable
-
-  /** One partition's edges in CSR form: sorted distinct sources `vtx`, the
-    * neighbours of `vtx(i)` at `nbr(off(i) until off(i + 1))`. */
-  private final class Adjacency(val vtx: Array[Long], off: Array[Int],
-      nbr: Array[Long]) extends Serializable {
-
-    private def index(v: Long): Int = {
-      val i = java.util.Arrays.binarySearch(vtx, v)
-      require(i >= 0, s"vertex $v has an in-edge but no out-edge:" +
-        " the edge set must hold both directions")
-      i
-    }
-
-    /** Round 1: min(u, min over u's neighbours). */
-    def firstLabels: Labels = {
-      val comp = new Array[Long](vtx.length)
-      val changed = new java.util.BitSet(vtx.length)
-      var i = 0
-      while (i < vtx.length) {
-        var c = vtx(i)
-        var j = off(i)
-        while (j < off(i + 1)) { if (nbr(j) < c) c = nbr(j); j += 1 }
-        comp(i) = c
-        if (c < vtx(i)) changed.set(i)
-        i += 1
-      }
-      new Labels(comp, changed)
-    }
-
-    /** The changed vertices' labels, min-combined per neighbour. */
-    def messages(l: Labels): Iterator[(Long, Long)] = {
-      val best = scala.collection.mutable.LongMap.empty[Long]
-      var i = l.changed.nextSetBit(0)
-      while (i >= 0) {
-        val c = l.comp(i)
-        var j = off(i)
-        while (j < off(i + 1)) {
-          if (c < best.getOrElse(nbr(j), Long.MaxValue)) best.update(nbr(j), c)
-          j += 1
-        }
-        i = l.changed.nextSetBit(i + 1)
-      }
-      best.iterator
-    }
-
-    /** The next round's labels: the old ones lowered by the messages. */
-    def receive(old: Labels, msgs: Iterator[(Long, Long)]): Labels = {
-      val comp = old.comp.clone()
-      val changed = new java.util.BitSet(vtx.length)
-      msgs.foreach { case (v, c) =>
-        val i = index(v)
-        if (c < comp(i)) { comp(i) = c; changed.set(i) }
-      }
-      new Labels(comp, changed)
-    }
-  }
-
-  private object Adjacency {
-    def apply(edges: Iterator[(Long, Long)]): Adjacency = {
-      val us = Array.newBuilder[Long]
-      val vs = Array.newBuilder[Long]
-      edges.foreach { case (u, v) => us += u; vs += v }
-      val (u, v) = (us.result(), vs.result())
-      val sorted = u.clone()
-      java.util.Arrays.sort(sorted)
-      var m = 0
-      var j = 0
-      while (j < sorted.length) {
-        if (m == 0 || sorted(m - 1) != sorted(j)) { sorted(m) = sorted(j); m += 1 }
-        j += 1
-      }
-      val vtx = java.util.Arrays.copyOf(sorted, m)
-      val off = new Array[Int](m + 1)
-      u.foreach(x => off(java.util.Arrays.binarySearch(vtx, x) + 1) += 1)
-      j = 0
-      while (j < m) { off(j + 1) += off(j); j += 1 }
-      val fill = java.util.Arrays.copyOf(off, m)
-      val nbr = new Array[Long](u.length)
-      j = 0
-      while (j < u.length) {
-        val i = java.util.Arrays.binarySearch(vtx, u(j))
-        nbr(fill(i)) = v(j)
-        fill(i) += 1
-        j += 1
-      }
-      new Adjacency(vtx, off, nbr)
-    }
+    run.state.withColumnRenamed("value", "comp")
   }
 
   /** PageRank, fixed 10 iterations, damping 0.85 — the second iterative
@@ -442,35 +268,28 @@ object GraphQueries {
       .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
   }
 
+  /** The source set of bfs and sssp: vertices with id < 10, at distance 0. */
+  private val sources: Long => Option[Long] = v => if (v < 10) Some(0L) else None
+
   /** Multi-source BFS: hop distance from the source set (vertices with id
-    * < 10) via iterative min-dist relaxation — the third Pregel-shaped
-    * loop (after CC and PageRank), with frontier semantics expressed as
-    * monotone relaxation: distances only decrease, vertices only appear,
-    * so the (count, sum) pair is the convergence invariant (stable ⇔
-    * fixpoint). Rounds run in `Fixpoint.relax` batches of k = 3 (r12,
-    * sf0.1, same-JVM interleaved: 3.0-3.3 s round-at-a-time → 2.5-2.7 s,
-    * answer-identical). Fails loudly if not converged inside maxIter —
-    * the oracle (recursive CTE, dist bounded by the same budget) computes
-    * the true bounded fixpoint, and silently-partial distances would
-    * diverge from it. Convergence is only seen at batch boundaries (see
-    * `Fixpoint`), so a custom `maxIter` can throw where a per-round probe
-    * would have converged. Unreached vertices are absent (not
+    * < 10) — the third Pregel-shaped loop (after CC and PageRank), with
+    * frontier semantics expressed as monotone min-plus relaxation over
+    * unit-weight edges (`Fixpoint.propagate`, one job per round):
+    * distances only decrease, vertices only appear, so a repeated
+    * (count, sum) probe ⇔ fixpoint. `maxIter` counts rounds, the one that
+    * confirms the fixpoint included. Fails loudly if not converged inside
+    * maxIter — the oracle (recursive CTE, dist bounded by the same budget)
+    * computes the true bounded fixpoint, and silently-partial distances
+    * would diverge from it. Unreached vertices are absent (not
     * null-distance).
     */
   def bfs(s: SparkSession, d: String, maxIter: Int = 30): DataFrame = {
-    val e = edges(s, d).localCheckpoint(false)
-    val eAug = e.select(col("u"), col("v"), lit(1).as("w"))
-      .union(e.select(col("u")).distinct()
-        .select(col("u"), col("u").as("v"), lit(0).as("w")))
-      .localCheckpoint(false)
-    val sources = e.select(col("u").as("vtx")).filter(col("vtx") < 10)
-      .distinct().withColumn("dist", lit(0)).localCheckpoint(false)
-    val run = Fixpoint.run(sources, maxIter, batch = 3)(
-      Fixpoint.relax(eAug, _, "dist", min, _))
+    val run = Fixpoint.propagate(edges(s, d).withColumn("w", lit(1L)), sources,
+      Fixpoint.Min, symmetric = true, maxIter)
     if (!run.converged)
       throw new IllegalStateException(
         s"BFS did not converge within $maxIter iterations — raise maxIter")
-    run.state.select(col("vtx"), col("dist").cast("int").as("dist")).orderBy("vtx")
+    run.state.select(col("vtx"), col("value").cast("int").as("dist")).orderBy("vtx")
   }
 
   /** k-core decomposition (k = 5): synchronously peel every vertex whose
@@ -489,7 +308,7 @@ object GraphQueries {
     * size, bounds the round count; every round's shuffle shrinks.
     */
   def kcore(s: SparkSession, d: String, k: Int = 5, maxIter: Int = 30): DataFrame = {
-    val run = Fixpoint.run(edges(s, d).localCheckpoint(false), maxIter) { (e, _) =>
+    val run = Fixpoint.run(edges(s, d).localCheckpoint(false), maxIter) { e =>
       val keep = e.groupBy("u").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("u")
       val next = e.join(keep, Seq("u"), "left_semi")
@@ -711,28 +530,19 @@ object GraphQueries {
     * unrolls the identical rounds as chained CTEs, the pagerank device),
     * so the gate never depends on a convergence argument — and the spec
     * separately proves round rounds+1 changes nothing at two SFs, i.e.
-    * the fixture answer IS the true fixpoint. Rounds run in
-    * `Fixpoint.relax` batches of k = 5, one checkpoint and one eager
-    * (count, sum) probe per batch (r12, sf0.1, same-JVM interleaved:
-    * 5.9-7.3 s round-at-a-time → 4.4-5.0 s, identical 18 008-row output;
-    * the fixture fixpoint lands at round 15 of 20). A repeated probe means
-    * every later contractual round repeats verbatim, so stopping there
-    * is bit-identical to the 20-round definition the oracle unrolls.
-    * Scale: each round is one keyed shuffle join + min-aggregate over
-    * (long, long) rows; state is one distance per reached vertex. */
+    * the fixture answer IS the true fixpoint. The rounds run on
+    * `Fixpoint.propagate` (min-plus, one job per round) and stop at the
+    * first repeated probe: every later contractual round would repeat
+    * verbatim, so stopping there is bit-identical to the 20-round
+    * definition the oracle unrolls. Scale: state is one distance per
+    * reached vertex, messages one per changed vertex's out-edge. */
   def ssspBellmanFord(s: SparkSession, d: String, rounds: Int = 20): DataFrame = {
     val und = edges(s, d)
     val w = Fnv1a64.ihash31(concat(least(col("u"), col("v")).cast("string"),
       lit("|"), greatest(col("u"), col("v")).cast("string"))) % 1000L + 1L
-    val e = und.select(col("u"), col("v"), w.as("w")).localCheckpoint(false)
-    val eAug = e.union(e.select(col("u")).distinct()
-        .select(col("u"), col("u").as("v"), lit(0L).as("w")))
-      .localCheckpoint(false)
-    val sources = e.select(col("u").as("vtx")).distinct()
-      .filter(col("vtx") < 10).withColumn("dist", lit(0L))
-      .localCheckpoint(false)
-    Fixpoint.run(sources, rounds, batch = 5)(Fixpoint.relax(eAug, _, "dist", min, _))
-      .state.orderBy("vtx")
+    Fixpoint.propagate(und.select(col("u"), col("v"), w.as("w")), sources,
+        Fixpoint.Min, symmetric = true, rounds)
+      .state.select(col("vtx"), col("value").as("dist")).orderBy("vtx")
   }
 
   /** Dense co-purchase graph: distinct part pairs sharing an even-keyed
@@ -828,7 +638,7 @@ object GraphQueries {
     // in 2 of the 8 contractual rounds, so 6 wedge enumerations are
     // replaced by replaying the converged count (the output IS the
     // fixed-8-round curve either way)
-    val run = Fixpoint.run((packed, packed.count()), rounds) { case ((cur, nCur), _) =>
+    val run = Fixpoint.run((packed, packed.count()), rounds) { case (cur, nCur) =>
       // wedge side 2 AND the closing edge set broadcast ONLY while the
       // measured edge count fits the budget (edgesFitBroadcast — the
       // peel's shrinking sets always do at fixture decades, so the
@@ -879,13 +689,11 @@ object GraphQueries {
     * relaxation with the fixed-round contract (45 rounds ≥ the 40-deep
     * sf0.001 fixture; the spec proves round 46 changes nothing, and the
     * relaxation is monotone non-decreasing so extra rounds are
-    * idempotent). Rounds run in `Fixpoint.relax` batches of k = 9, one
-    * checkpoint and one eager (count, sum) probe per batch, stopping at the
-    * first repeated probe (r11: the per-round job launch, checkpoint and
-    * probe, ~0.2 s each, dominated the 10.6 s round-at-a-time wall at
-    * sf0.1, where the data work of all rounds is ~2 s). Output is the
-    * decision-sized layer histogram. Scale: each round one keyed join +
-    * max-aggregate over (long, int) rows.
+    * idempotent). The rounds run on `Fixpoint.propagate` over the
+    * directed edges (max-plus from layer 0 everywhere, one job per
+    * round) and stop at the first repeated probe. Output is the
+    * decision-sized layer histogram. Scale: state is one layer per
+    * vertex, messages one per changed vertex's out-edge.
     */
   def dagLayers(s: SparkSession, d: String, rounds: Int = 45): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -893,15 +701,11 @@ object GraphQueries {
     val e = li.as("a").join(li.as("b"),
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-      .agg(count(lit(1)).as("w")).filter(col("w") >= 2).select("u", "v")
-      .localCheckpoint(false)
-    val layer0 = e.select(col("u").as("vtx")).union(e.select(col("v").as("vtx")))
-      .distinct().withColumn("layer", lit(0)).localCheckpoint(false)
-    val eAug = e.select(col("u"), col("v"), lit(1).as("w"))
-      .union(layer0.select(col("vtx").as("u"), col("vtx").as("v"), lit(0).as("w")))
-      .localCheckpoint(false)
-    Fixpoint.run(layer0, rounds, batch = 9)(Fixpoint.relax(eAug, _, "layer", max, _))
-      .state.groupBy("layer").agg(count(lit(1)).as("n_vertices")).orderBy("layer")
+      .agg(count(lit(1)).as("w")).filter(col("w") >= 2)
+    Fixpoint.propagate(e.select(col("u"), col("v"), lit(1L).as("w")),
+        _ => Some(0L), Fixpoint.Max, symmetric = false, rounds)
+      .state.groupBy(col("value").cast("int").as("layer"))
+      .agg(count(lit(1)).as("n_vertices")).orderBy("layer")
   }
 
   private def dagLayersSql(rounds: Int): String = {

@@ -94,8 +94,10 @@ object MiningQueries {
     * communities refine those components). Each round is one join + one
     * count aggregate + one per-vertex argmax — the Pregel superstep as
     * dataflow. Rounds are unrolled (not run to fixpoint) so the DuckDB
-    * oracle can restate them as three chained CTEs; the fixpoint form
-    * would run on `Fixpoint.run`, as graph_components does.
+    * oracle can restate them as three chained CTEs. Its combine is a
+    * per-vertex argmax of label counts, not a min or max, so it does not
+    * fit `Fixpoint.propagate`; a fixpoint form would still stop on
+    * `Fixpoint.run`'s repeated probe.
     *
     * Scale: per-round cost is |E| join + |E| aggregate, hash-partitioned
     * on vertex id; the argmax window partitions by vertex (no global
