@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.LetterRuns.letterRuns
 
 /** Word count, Spark-native.
   *
@@ -13,20 +14,24 @@ import org.apache.spark.sql.functions._
   *   - global order by (count ASC, word ASC) (wc.rs:60-66)
   *   - report lines "{count}\t{word}" (wc.rs:68-73)
   *
-  * Spark plan: scan → generate (explode of split) → partial hash-agg →
-  * shuffle on word → final hash-agg → range-partitioned sort. The map-side
-  * partial aggregation is a strict upgrade over the reference, which shuffles
-  * every (word, 1) pair (`/root/reference/src/worker/mod.rs:182-195` has no
-  * combiner). At 100 TB the partial agg keeps shuffle volume proportional to
-  * the vocabulary, not the corpus.
+  * Spark plan: scan → generate (explode of `letter_runs(lower(text))`, one
+  * fused codegen'd tokenizer pass per line: [[graft.plans.LetterRuns]]) →
+  * partial hash-agg → shuffle on word → final hash-agg → range-partitioned
+  * sort. The map-side partial aggregation is a strict upgrade over the
+  * reference, which shuffles every (word, 1) pair
+  * (`/root/reference/src/worker/mod.rs:182-195` has no combiner). At
+  * 100 TB the partial agg keeps shuffle volume proportional to the
+  * vocabulary, not the corpus.
   */
 object WordCount {
 
-  /** Tokenize a text column: split on runs of non-letters, lowercase, drop
-    * empties. Unicode-aware like Rust's `char::is_alphabetic` (wc.rs:14).
+  /** Tokenize a text column: lowercase (Spark's own `lower`), then the
+    * maximal runs of `\p{L}` letters, empties never produced. Unicode-aware
+    * like Rust's `char::is_alphabetic` (wc.rs:14). Equal to
+    * `filter(split(lower(text), "[^\\p{L}]+"), t -> length(t) > 0)`
+    * without its regex or interpreted lambda.
     */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "[^\\p{L}]+"), t => length(t) > 0)
+  def tokens(text: Column): Column = letterRuns(lower(text))
 
   /** (word, cnt) counts for a DataFrame with a `text` column, ordered by
     * (cnt ASC, word ASC) — the reference's exact output order.

@@ -29,4 +29,12 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over an RDD of Catalyst rows of `schema`, without the
+    * `Row` conversion `createDataFrame` runs (graft.operators.VertexDegree's
+    * per-partition combiner emits its partial counts this way). */
+  def fromInternalRows(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

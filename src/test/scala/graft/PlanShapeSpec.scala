@@ -310,4 +310,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("*("), s"expected WholeStageCodegen stages:\n$plan")
     assert(plan.contains("HashAggregate"), plan)
   }
+
+  test("wc_wordcount tokenizes with letter_runs: no regex split, no lambda") {
+    val plan = executedPlan("wc_wordcount")
+    assert(plan.contains("letter_runs(lower("), plan)
+    assert(!plan.contains("lambdafunction") && !plan.contains("filter(") &&
+      !plan.contains("split("), s"tokenizer must not split by regex or filter:\n$plan")
+  }
+
+  test("vertex_degree: combiner partials feed the sum, no per-endpoint Generate") {
+    val plan = executedPlan("vertex_degree")
+    assert(plan.contains("Scan ExistingRDD") && plan.contains("sum("), plan)
+    assert(!plan.contains("Generate"), s"endpoints must not be exploded:\n$plan")
+  }
 }

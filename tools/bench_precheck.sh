@@ -22,7 +22,7 @@
 #
 # Exit 0 = window healthy, record the run. Exit 1 = degraded, do NOT record.
 set -uo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 
 # Pinned revision holding the qualified quiet-window bench reference
 # (r8 run, 287.526 s / 369 queries). Re-pin only to a revision whose run

@@ -3,9 +3,10 @@
 # from graft.tools.Explain at sf0.1. Run after any plan-affecting change
 # (PlanShapeSpec/PlanAuditSpec pin the load-bearing properties as tests;
 # this file is the companion showing the full operator trees).
-# Usage: gen_plans.sh   (writes /root/repo/PLANS.md)
+# Usage: gen_plans.sh   (writes PLANS.md at the repository root)
 set -euo pipefail
-cd /root/repo
+root="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$root"
 
 # Headline set: the long-standing 20 plan exemplars plus the r9/r10
 # engine-change surfaces (ktruss gated SHUFFLE_HASH peel, scaled-LSH
@@ -17,7 +18,7 @@ layout_zorder graph_triangles pipeline_source_quantiles \
 dedup_near_keep_best q_dpp_join ml_histogram_split \
 graph_ktruss dedup_embedding_lsh dedup_semantic q_shuffle_hash_join"
 
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="$root/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \

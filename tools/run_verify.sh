@@ -3,7 +3,8 @@
 # build.sbt's javaOptions). Usage: run_verify.sh <sfDir> <outDir>
 # Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY, SPARK_DRIVER_MEM honored.
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+root="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$root/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
