@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Vertex degree over an edge list, Spark-native.
   *
@@ -16,13 +18,29 @@ import org.apache.spark.sql.types._
   *     duplicate edges are not deduped (vertex_degree.rs:32-53)
   *   - output ordered by vertex id ASC, "{vertex}\t{degree}" (73-89)
   *
-  * Plan: scan → project two key columns → a per-partition degree combiner
-  * (in-mapper combining, MapReduce Algorithms for Big Data Analysis, VLDB
-  * 2012) over the projection's physical rows → partial + final hash-agg
-  * summing its partial counts → sort. One shuffle, keyed on vertex,
-  * carrying at most one row per (vertex, flush) per partition; AQE handles
-  * any hub-vertex skew at scale (a power-law graph at 100 TB would
-  * otherwise hot-spot the reducers holding celebrity vertices).
+  * Plan: the paper's map → shuffle → sort → reduce as one range shuffle in
+  * RDD land, with no Catalyst aggregate, sort or exchange:
+  *   - map: scan → project two key columns → a per-partition degree
+  *     combiner (in-mapper combining, MapReduce Algorithms for Big Data
+  *     Analysis, VLDB 2012) over the projection's physical rows; each flush
+  *     drains as one [[VertexDegree.Run]] of sorted distinct vertices with
+  *     their counts. The runs persist, and the same job samples up to 20
+  *     keys per range from each.
+  *   - driver: at most P − 1 range bounds from that sample, P being
+  *     `spark.sql.shuffle.partitions`; no second pass over the data.
+  *   - shuffle: each run is cut by binary search into per-range slices,
+  *     moved by one `partitionBy` on the range index.
+  *   - reduce: the range's slices are summed per vertex in one more
+  *     [[VertexDegree.LongCounts]], drained in vertex order.
+  * Range i's vertices all precede range i+1's, so the rows come out
+  * globally ordered by vertex, the null vertex first. The shuffle carries
+  * at most one entry per (vertex, flush) per partition, so a hub vertex
+  * costs the shuffle no more than any other; a range's reducer holds one
+  * counter per vertex of its range, about 1/P of all vertices.
+  *
+  * `degrees` starts one job when it is called: the build job that persists
+  * the runs and samples them (`Session.reset` unpersists them). A plan node
+  * for eager loops (ROADMAP direction 4) could fold it into the action.
   *
   * The combiner counts both endpoints of every edge into a primitive
   * open-addressing `Long → Long` map ([[VertexDegree.LongCounts]]), so no
@@ -37,16 +55,20 @@ object VertexDegree {
     * (key, count) pair of longs is 16 MiB per running task (24 MiB while
     * it doubles into that size), whatever the partition's size. The map
     * doubles from [[InitialSlots]] as keys arrive; at this size, once half
-    * its slots are taken, it emits its partial counts downstream and
-    * clears. The final sum makes those early flushes exact, so a partition
-    * of any size or vertex count runs in bounded memory. Half of 2^20
-    * slots holds every vertex of the sf1 benchmark graph (~210,000), so
-    * there each partition flushes once, at its end.
+    * its slots are taken, it drains one sorted run and clears. The reduce
+    * side sums a vertex over every run, so those early flushes are exact
+    * and a partition of any size or vertex count runs in bounded memory.
+    * Half of 2^20 slots holds every vertex of the sf1 benchmark graph
+    * (~210,000), so there each partition flushes once, at its end.
     */
   private val MaxSlots = 1 << 20
 
   /** Starting slot count: small partitions allocate 64 KiB, not 16 MiB. */
   private val InitialSlots = 1 << 12
+
+  /** Sample keys taken from each run per range, as Spark's
+    * `RangePartitioner` takes per output partition. */
+  private val SamplePerRange = 20
 
   /** Degrees from a DataFrame of (src, dst) integral columns: `vertex`
     * (long, null for null endpoints) and `degree` (long), by vertex ASC.
@@ -68,19 +90,75 @@ object VertexDegree {
           s"edge column $c must be integral, got ${other.catalogString}")
       }
     }
-    // planned now, computed when the result runs (an input with exchanges
-    // under AQE runs them while planning); rows are reused between next()s
-    val partials = edges.select(ends: _*).queryExecution.toRdd
-      .mapPartitions(rows => combine(rows, maxSlots))
-    GraftSqlBridge.fromInternalRows(edges.sparkSession, partials, PartialSchema)
-      .groupBy("vertex")
-      .agg(sum("degree").as("degree"))
-      .orderBy("vertex")
+    val spark = edges.sparkSession
+    val ranges = spark.sessionState.conf.numShufflePartitions
+    // the projection's rows are reused between next()s
+    val runs = edges.select(ends: _*).queryExecution.toRdd
+      .mapPartitions(rows => sortedRuns(rows, maxSlots))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the build job: computes and persists the runs while it samples them
+    val bounds = rangeBounds(runs.flatMap(_.sample(SamplePerRange * ranges)).collect(), ranges)
+    // an Int range index hashes to itself, so range i lands in partition i
+    val merged = runs.flatMap(_.slices(bounds))
+      .partitionBy(new HashPartitioner(bounds.length + 1))
+      .mapPartitions(slices => merge(slices.map(_._2)))
+    GraftSqlBridge.fromInternalRows(spark, merged, Schema)
   }
 
-  private val PartialSchema = StructType(Seq(
+  /** `degree` stays nullable, as the `sum` this plan replaced declared it. */
+  private val Schema = StructType(Seq(
     StructField("vertex", LongType, nullable = true),
-    StructField("degree", LongType, nullable = false)))
+    StructField("degree", LongType, nullable = true)))
+
+  /** Distinct vertices in ascending order with their counts, and a count of
+    * null endpoints: one flush of a partition's combiner, or the slice of
+    * one that falls in one range.
+    */
+  private[graft] final class Run(val keys: Array[Long], val counts: Array[Long], val nulls: Long)
+      extends Serializable {
+    def isEmpty: Boolean = keys.isEmpty && nulls == 0
+
+    /** Up to `n` evenly spaced keys, each weighted by the keys it stands for. */
+    def sample(n: Int): Iterator[(Long, Double)] = {
+      val m = math.min(n, keys.length)
+      Iterator.tabulate(m)(i => (keys((i.toLong * keys.length / m).toInt), keys.length.toDouble / m))
+    }
+
+    /** (range index, slice) pairs: range i holds the keys above bound i − 1
+      * up to bound i, the last range those above every bound; the null
+      * count rides with range 0 and empty slices are dropped.
+      */
+    def slices(bounds: Array[Long]): Iterator[(Int, Run)] = {
+      val ends = bounds.map { b =>
+        val p = java.util.Arrays.binarySearch(keys, b)
+        if (p >= 0) p + 1 else -p - 1
+      } :+ keys.length
+      ends.indices.iterator.map { i =>
+        val (from, to) = (if (i == 0) 0 else ends(i - 1), ends(i))
+        i -> new Run(java.util.Arrays.copyOfRange(keys, from, to),
+          java.util.Arrays.copyOfRange(counts, from, to), if (i == 0) nulls else 0L)
+      }.filterNot(_._2.isEmpty)
+    }
+  }
+
+  /** At most `ranges` − 1 strictly increasing bounds at the weighted
+    * quantiles of `sample`, as Spark's `RangePartitioner` picks them; a
+    * key sampled more than once is one bound, so fewer distinct keys than
+    * ranges mean fewer ranges.
+    */
+  private def rangeBounds(sample: Array[(Long, Double)], ranges: Int): Array[Long] = {
+    val step = sample.map(_._2).sum / ranges
+    val bounds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var (weight, target) = (0.0, step)
+    for ((key, w) <- sample.sortBy(_._1) if bounds.length < ranges - 1) {
+      weight += w
+      if (weight >= target && (bounds.isEmpty || key > bounds.last)) {
+        bounds += key
+        target += step
+      }
+    }
+    bounds.toArray
+  }
 
   /** Primitive open-addressing `Long → Long` counter: keys and counts
     * interleaved in one array (a probe touches one cache line), linear
@@ -100,40 +178,44 @@ object VertexDegree {
       */
     def full: Boolean = used >= maxSlots / 2
 
-    def add(key: Long): Unit = {
-      val mask = slots - 1
-      var s = slot(key, slots)
-      while (table(2 * s + 1) != 0 && table(2 * s) != key) s = (s + 1) & mask
+    /** Counts `key` `n` more times; `n` > 0. */
+    def add(key: Long, n: Long = 1L): Unit = {
+      val s = find(key)
       if (table(2 * s + 1) == 0) {
         table(2 * s) = key
         used += 1
       }
-      table(2 * s + 1) += 1
+      table(2 * s + 1) += n
       if (2 * used > slots && slots < maxSlots) grow()
     }
 
-    /** Its (key, count) pairs, written one at a time into `row`; the map
-      * clears as the last one is read, ready for the next batch.
+    /** Its keys in ascending order with their counts, as one [[Run]] with
+      * `nulls` null endpoints; the map clears, ready for the next batch.
       */
-    def drain(row: InternalRow): Iterator[InternalRow] = new Iterator[InternalRow] {
-      private var s = nextOccupied(0)
-      override def hasNext: Boolean = s >= 0
-      override def next(): InternalRow = {
-        row.setLong(0, table(2 * s))
-        row.setLong(1, table(2 * s + 1))
-        s = nextOccupied(s + 1)
-        if (s < 0) {
-          java.util.Arrays.fill(table, 0L)
-          used = 0
+    def drain(nulls: Long): Run = {
+      val keys = new Array[Long](used)
+      var (s, n) = (0, 0)
+      while (s < slots) {
+        if (table(2 * s + 1) != 0) {
+          keys(n) = table(2 * s)
+          n += 1
         }
-        row
+        s += 1
       }
+      java.util.Arrays.sort(keys)
+      val counts = new Array[Long](used)
+      for (i <- keys.indices) counts(i) = table(2 * find(keys(i)) + 1)
+      java.util.Arrays.fill(table, 0L)
+      used = 0
+      new Run(keys, counts, nulls)
     }
 
-    private def nextOccupied(from: Int): Int = {
-      var s = from
-      while (s < slots && table(2 * s + 1) == 0) s += 1
-      if (s < slots) s else -1
+    /** The slot holding `key`, else the empty slot where it would go. */
+    private def find(key: Long): Int = {
+      val mask = slots - 1
+      var s = slot(key, slots)
+      while (table(2 * s + 1) != 0 && table(2 * s) != key) s = (s + 1) & mask
+      s
     }
 
     private def slot(key: Long, n: Int): Int =
@@ -144,12 +226,10 @@ object VertexDegree {
       val oldSlots = slots
       slots *= 2
       table = new Array[Long](2 * slots)
-      val mask = slots - 1
       var o = 0
       while (o < oldSlots) {
         if (old(2 * o + 1) != 0) {
-          var s = slot(old(2 * o), slots)
-          while (table(2 * s + 1) != 0) s = (s + 1) & mask
+          val s = find(old(2 * o))
           table(2 * s) = old(2 * o)
           table(2 * s + 1) = old(2 * o + 1)
         }
@@ -158,33 +238,44 @@ object VertexDegree {
     }
   }
 
-  /** One partition's partial degrees: fills a [[LongCounts]] with the
-    * endpoints of (src, dst) rows until it is full or the input ends,
-    * drains it, and repeats; the null-endpoint count comes last. The one
-    * output row is reused between `next()` calls.
+  /** One partition's runs: fills a [[LongCounts]] with the endpoints of
+    * (src, dst) rows until it is full or the input ends, drains it as one
+    * sorted [[Run]] with the null endpoints seen meanwhile, and repeats
+    * until a fill finds the input already spent.
     */
-  private def combine(in: Iterator[InternalRow], maxSlots: Int): Iterator[InternalRow] = {
+  private def sortedRuns(in: Iterator[InternalRow], maxSlots: Int): Iterator[Run] = {
     val counts = new LongCounts(maxSlots)
-    val row = new SpecificInternalRow(Seq(LongType, LongType))
-    var nulls = 0L
-    def fill(): Iterator[InternalRow] = {
+    Iterator.continually {
+      var nulls = 0L
       while (!counts.full && in.hasNext) {
         val e = in.next()
         if (e.isNullAt(0)) nulls += 1 else counts.add(e.getLong(0))
         if (e.isNullAt(1)) nulls += 1 else counts.add(e.getLong(1))
       }
-      counts.drain(row)
+      counts.drain(nulls)
+    }.takeWhile(!_.isEmpty)
+  }
+
+  /** A range's degrees: its slices summed into one [[LongCounts]] without
+    * a cap (a range holds about 1/P of the vertices) and drained in vertex
+    * order, after the null vertex. The one output row is reused between
+    * `next()` calls.
+    */
+  private def merge(slices: Iterator[Run]): Iterator[InternalRow] = {
+    val sums = new LongCounts(1 << 30)
+    var nulls = 0L
+    slices.foreach { s =>
+      nulls += s.nulls
+      for (i <- s.keys.indices) sums.add(s.keys(i), s.counts(i))
     }
-    // a batch drains before the next one fills; `++` takes its operand by
-    // name, so `nulls` is read after the last batch
-    Iterator.continually(fill()).takeWhile(_.hasNext).flatten ++ {
-      if (nulls == 0) Iterator.empty
-      else {
-        row.setNullAt(0)
-        row.setLong(1, nulls)
-        Iterator.single(row)
+    val run = sums.drain(nulls)
+    val row = new SpecificInternalRow(Seq(LongType, LongType))
+    (if (nulls == 0) Iterator.empty else Iterator.single(InternalRow(null, nulls))) ++
+      run.keys.indices.iterator.map { i =>
+        row.setLong(0, run.keys(i))
+        row.setLong(1, run.counts(i))
+        row
       }
-    }
   }
 
   /** Parse `src<ws>dst` text lines into edges; strict like the reference —
@@ -217,8 +308,10 @@ object VertexDegree {
   def overTextFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
     degrees(parseEdges(spark, paths))
 
-  /** Reference-golden report: "{vertex}\t{degree}\n" (vertex_degree.rs:82-89). */
+  /** Reference-golden report: "{vertex}\t{degree}\n" (vertex_degree.rs:82-89),
+    * in the vertex order `degrees` returns its rows in.
+    */
   def report(deg: DataFrame): String =
-    deg.orderBy("vertex").collect()
+    deg.collect()
       .map(r => s"${r.getLong(0)}\t${r.getLong(1)}\n").mkString
 }

@@ -32,7 +32,7 @@ object GraftSqlBridge {
 
   /** A DataFrame over an RDD of Catalyst rows of `schema`, without the
     * `Row` conversion `createDataFrame` runs (graft.operators.VertexDegree's
-    * per-partition combiner emits its partial counts this way). */
+    * range merge emits its degrees this way). */
   def fromInternalRows(spark: SparkSession,
       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =

@@ -2,15 +2,17 @@ package graft
 
 import graft.operators.VertexDegree
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The per-partition degree combiner against the aggregate it replaced,
-  * `explode(array(src, dst))` + `groupBy(vertex).count()`, on seeded random
-  * edge frames over many partitions: extreme and negative ids, self-loops
-  * (counted twice), duplicate edges, null endpoints (one null-vertex
-  * group) and the empty frame. A tiny slot cap forces the flush path.
+/** The combiner runs and their range shuffle against the aggregate they
+  * replaced, `explode(array(src, dst))` + `groupBy(vertex).count()` +
+  * `orderBy(vertex)`, on seeded random edge frames over many partitions:
+  * extreme and negative ids, self-loops (counted twice), duplicate edges,
+  * null endpoints (one null-vertex group) and the empty frame. A tiny slot
+  * cap forces several runs per partition. Every comparison is of the raw
+  * `collect()` order: `degrees` has no `orderBy`, and `tools/check.py`
+  * canonicalizes rows, so this suite is what certifies the order.
   */
 class VertexDegreeSpec extends SparkSpec {
 
@@ -29,9 +31,13 @@ class VertexDegreeSpec extends SparkSpec {
       // one edge in eight is a self-loop
       Row(src, if (rnd.nextInt(8) == 0) src else id())
     }
-    val schema = StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(data, partitions), schema)
+    frame(partitions, data: _*)
   }
+
+  private val schema = StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
+
+  private def frame(partitions: Int, edges: Row*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(edges, partitions), schema)
 
   private def explodeDegrees(edges: DataFrame): DataFrame =
     edges.select(explode(array(col("src"), col("dst"))).as("vertex"))
@@ -60,12 +66,45 @@ class VertexDegreeSpec extends SparkSpec {
   }
 
   test("empty and all-null edge frames") {
-    val schema = StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
-    val empty = spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 4), schema)
-    assert(VertexDegree.degrees(empty).collect().isEmpty)
-    val nulls = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(null, null), Row(null, 5L)), 2), schema)
+    assert(VertexDegree.degrees(frame(4)).collect().isEmpty)
+    val nulls = frame(2, Row(null, null), Row(null, 5L))
     assert(rows(VertexDegree.degrees(nulls)) == Seq((None, 3L), (Some(5L), 1L)))
+  }
+
+  test("rows come out ordered by vertex, nulls first, at any range count") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val edges = Seq((5, 1), (6, 7), (7, 16)).map { case (seed, p) => edgeFrame(seed, 3000, p) }
+    val wants = edges.map(e => rows(explodeDegrees(e)))
+    // four vertices and the null one, fewer than 8 ranges: the sampled
+    // keys repeat and most would-be bounds coincide
+    val few = frame(5, Row(7L, 7L), Row(null, 3L), Row(3L, 7L), Row(Long.MaxValue, Long.MinValue))
+    try {
+      for (ranges <- Seq(1, 3, 8)) {
+        spark.conf.set(key, ranges.toString)
+        for ((e, want) <- edges.zip(wants); cap <- Seq(4, 8, 1 << 20)) {
+          val deg = VertexDegree.degrees(e, "src", "dst", cap)
+          assert(rows(deg) == want, s"$ranges ranges, ${e.rdd.getNumPartitions} partitions, cap $cap")
+          assert(deg.rdd.getNumPartitions == ranges)
+        }
+        assert(rows(VertexDegree.degrees(few)) == Seq((None, 1L), (Some(Long.MinValue), 1L),
+          (Some(3L), 2L), (Some(7L), 3L), (Some(Long.MaxValue), 1L)), s"$ranges ranges")
+        assert(VertexDegree.degrees(frame(3)).collect().isEmpty)
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("vertex_degree: one build job, one action job, no block left after reset") {
+    val jobs = (1 to 3).map { _ =>
+      Session.reset(spark)
+      val (df, build) = JobCounter.count(spark)(SparkEntry.queries("vertex_degree")(spark, sf))
+      val (_, action) = JobCounter.count(spark)(df.collect())
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "the runs are persisted")
+      Session.reset(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      (build, action)
+    }
+    assert(jobs == Seq.fill(3)((1, 1)))
   }
 
   test("integer endpoints widen to long vertices; other types are rejected") {
@@ -81,15 +120,16 @@ class VertexDegreeSpec extends SparkSpec {
   test("LongCounts: exact counts for extreme keys across growth, full only at the cap") {
     val counts = new VertexDegree.LongCounts(1 << 14)
     val keys = extremes ++ (1 to 6000).map(i => i * 7919L - 20000000L)
-    keys.foreach(counts.add)
-    keys.take(3).foreach(counts.add)
+    keys.foreach(counts.add(_))
+    keys.take(3).foreach(counts.add(_, 4L))
     assert(counts.size == keys.length && !counts.full)
     val more = (6001 to 8192).map(_ * 7919L)
-    more.foreach(counts.add)
+    more.foreach(counts.add(_))
     assert(counts.full)
-    val row = new SpecificInternalRow(Seq(LongType, LongType))
-    val got = counts.drain(row).map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (keys ++ more).map(k => k -> (if (keys.take(3).contains(k)) 2L else 1L)).toMap)
-    assert(counts.size == 0 && !counts.full && !counts.drain(row).hasNext)
+    val run = counts.drain(nulls = 9L)
+    assert(run.keys.toSeq == (keys ++ more).sorted.toSeq && run.nulls == 9L)
+    assert(run.keys.zip(run.counts).toMap ==
+      (keys ++ more).map(k => k -> (if (keys.take(3).contains(k)) 5L else 1L)).toMap)
+    assert(counts.size == 0 && !counts.full && counts.drain(nulls = 0L).isEmpty)
   }
 }
