@@ -24,6 +24,22 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** A private child of `parent` (same SparkContext and catalog, its own SQL
+    * conf and temp views) with `confs` applied: per-query confs live and die
+    * with the child, never flipped on the shared session. Artifact isolation
+    * is turned off first (the repository adds no artifacts): with it on,
+    * each child's tasks run under their own classloader, a new key in
+    * Spark's codegen cache, so every child recompiled every class the
+    * parent had already compiled. The artifact manager reads that conf once,
+    * lazily, so it is set before the child runs anything.
+    */
+  def child(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val cs = parent.newSession()
+    cs.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    confs.foreach { case (k, v) => cs.conf.set(k, v) }
+    cs
+  }
+
   /** Free all cross-query state, so a query's work and timing do not depend
     * on what ran before it in the JVM: the table relation and footer-count
     * memos (each query pays its own file listing), the SQL cache, and every

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -427,13 +427,13 @@ object CatalogQueries {
     // column pruning on, a count(*) references zero columns and malformed
     // rows sail through. Disable pruning around an eager count so every
     // field is parsed and all three bad lines are detected. The flip runs
-    // in a throwaway newSession() — same SparkContext, PRIVATE SQL conf —
+    // in a throwaway `Session.child` — same SparkContext, PRIVATE SQL conf —
     // so the shared session's conf is never mutated and the builder stays
     // race-free under concurrent query construction (the PERMISSIVE half
     // above executes later, under the caller's session, with pruning at
     // its default).
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
+    val iso = Session.child(s,
+      "spark.sql.csv.parser.columnPruning.enabled" -> "false")
     val nDrop = iso.read.schema(nation.schema).option("mode", "DROPMALFORMED")
       .csv(s"$root/good", s"$root/bad").count()
     permissive

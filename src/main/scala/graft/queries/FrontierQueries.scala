@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.plans.Fnv1a64
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -83,7 +83,7 @@ object FrontierQueries {
     * aggregate job. Scale: each iteration scans with a pushed bucket
     * predicate; the script variable holds only the scalar accumulator. */
   def sqlScript(s: SparkSession, d: String): DataFrame = {
-    // The script runs on a PRIVATE child session (newSession: shared
+    // The script runs on a PRIVATE child session (Session.child: shared
     // SparkContext and catalog, separate conf and temp-view registry), so
     // the shared session's parser conf is never flipped even transiently —
     // a concurrently-BUILT query could otherwise observe
@@ -91,8 +91,7 @@ object FrontierQueries {
     // pattern). The temp view is session-scoped, hence registered on the
     // child, and the child's conf needs no restore: it dies with the
     // reference.
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.scripting.enabled", "true")
+    val ss = Session.child(s, "spark.sql.scripting.enabled" -> "true")
     Tables.orders(ss, d).createOrReplaceTempView("orders_script_v")
     ss.sql("""
       BEGIN

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The two SQL surfaces Spark 4 added that older engines route around:
@@ -34,8 +34,7 @@ object RecursiveQueries {
     * against a non-terminating recursion.
     */
   def recursiveAncestors(outer: SparkSession, d: String): DataFrame = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.cteRecursionRowLimit", "-1")
+    val s = Session.child(outer, "spark.sql.cteRecursionRowLimit" -> "-1")
     Tables.customer(s, d).createOrReplaceTempView("rec_customer")
     s.sql(
       """WITH RECURSIVE anc(node, anc, depth) AS (

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,68 +23,59 @@ object StreamingBridge {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Materialize the settled sink table driver-side and DROP the temp view
-    * — without this every invocation leaks one in-memory result table for
-    * the JVM lifetime (neither clearCache nor the persistent-RDD sweep
-    * touches temp views). Results are small (≤ tens of thousands of rows).
+  /** Collect the memory sink's table and DROP its temp view, then shape the
+    * rows on the caller's session. The memory sink's rows are already on
+    * the driver, so the collect starts no job; without the drop every run
+    * would leak one in-memory result table for the JVM lifetime (neither
+    * clearCache nor the persistent-RDD sweep touches temp views). The rows
+    * are re-created as one partition, so `shape` and each caller's trailing
+    * `orderBy` plan as local operators with no exchange.
     */
-  private def settle(s: SparkSession, sinkSession: SparkSession, name: String,
-      shaped: DataFrame): DataFrame = {
-    val rows = java.util.Arrays.asList(shaped.collect(): _*)
-    sinkSession.catalog.dropTempView(name)
-    s.createDataFrame(rows, shaped.schema)
+  private def settle(s: SparkSession, cs: SparkSession, name: String)
+      (shape: DataFrame => DataFrame): DataFrame = {
+    val sink = cs.table(name)
+    val rows = java.util.Arrays.asList(sink.collect(): _*)
+    cs.catalog.dropTempView(name)
+    shape(s.createDataFrame(rows, sink.schema).coalesce(1))
   }
 
-  /** Run a streaming frame to its settled memory-sink table, shape it, and
-    * clean up. The run-to-completion + always-stop + drop-view contract
-    * for every bridge query lives only here: a new bridge entry cannot
-    * leak a running query or a temp view by forgetting the boilerplate.
-    *
-    * The stream is BUILT AND RUN ON A PRIVATE CHILD SESSION
-    * (`s.newSession()` — shares the SparkContext, clones the conf):
-    * per-query streaming confs (`multipleWatermarkPolicy`, the RocksDB
-    * state-store provider) are plain `confs` entries that live and die
-    * with the bridge run instead of being set/restored on the shared
-    * session — the same concurrent-visibility race class
-    * FrontierQueries.sqlScript was isolated for. The memory-sink temp
-    * view lands in the child's (session-scoped) catalog, so a leak
-    * cannot outlive the bridge either.
+  /** State partitions (r8, measured by a stream probe): every stateful
+    * operator commits one state-store file per partition per micro-batch, a
+    * fixed ~100-200 ms cost independent of the rows held. At 32 partitions
+    * the sf0.1 interval joins spent 35-44 s of task time on commits and ran
+    * 2-3× slower than at 8. So the count is capped at 8 and never exceeds
+    * the cores: one wave of state tasks per batch. A deployment with real
+    * state volume sizes this to that volume instead.
     */
-  /** `singleBatch = false` is for sinks whose content is only complete
-    * after the trailing watermark micro-batch (stream-stream OUTER joins:
-    * unmatched rows emit on state eviction). Everything else runs
-    * Trigger.Once. */
-  /** State-partition sizing (r8, measured by a stream probe): every stateful
-    * operator commits one state-store file PER PARTITION PER MICRO-BATCH,
-    * a fixed ~100-200 ms I/O cost that is independent of the rows in the
-    * store — at 32 shuffle partitions the sf0.1 interval joins (4 stores
-    * per partition × 2 batches) spent 35-44 s of cumulative task time on
-    * commits holding ~12k state rows, and dropping to 8 partitions cut the
-    * bridge walls ~2-3× with byte-identical results. Production sizing is
-    * the same judgment in the other direction: state partitions sized to
-    * STATE VOLUME (so a 100 TB deployment raises this per-query conf),
-    * never defaulted to the batch shuffle width. Per-bridge `confs` can
-    * override. */
-  private val StateParts = Seq("spark.sql.shuffle.partitions" -> "8")
+  private def stateParts(s: SparkSession): (String, String) =
+    "spark.sql.shuffle.partitions" ->
+      math.min(8, s.sparkContext.defaultParallelism).toString
 
+  /** Run a streaming frame to its memory-sink table on a private child
+    * session (`Session.child`: the state partitions and the bridge's own
+    * `confs`, such as the watermark policy or the RocksDB provider, never
+    * touch the caller's session, and the sink's temp view lives in the
+    * child's catalog), always stop it, and settle it. A new bridge entry
+    * cannot leak a running query or a temp view by forgetting this.
+    *
+    * `singleBatch = true` runs Trigger.Once: the bounded source fits one
+    * micro-batch (Once processes all available input regardless of
+    * maxFilesPerTrigger), and skipping the trailing eviction-only batch
+    * saves ~40% of the stream-stream join's wall. `false` is for sinks
+    * complete only after the trailing watermark batch (the outer joins emit
+    * unmatched rows on state eviction; event-time timers fire there).
+    */
   private def runSettled(s: SparkSession, prefix: String, mode: OutputMode,
       singleBatch: Boolean = true, confs: Seq[(String, String)] = Nil)
       (build: SparkSession => DataFrame)
       (shape: DataFrame => DataFrame): DataFrame = {
-    val cs = s.newSession()
-    (StateParts ++ confs).foreach { case (k, v) => cs.conf.set(k, v) }
+    val cs = Session.child(s, stateParts(s) +: confs: _*)
     val name = s"graft_stream_${prefix}_${counter.incrementAndGet()}"
-    // Trigger.Once: the bounded source fits one micro-batch (Once processes
-    // ALL available input regardless of maxFilesPerTrigger), every bridge's
-    // sink content is complete after the data batch (inner joins emit
-    // eagerly; Complete mode rewrites; the stateful ops emit while
-    // processing), and skipping the trailing eviction-only batch saves ~40%
-    // of the stream-stream join's wall time. See StreamingOps.toMemorySink.
     val q = StreamingOps.toMemorySink(build(cs), name, mode, singleBatch)
     try {
       if (singleBatch) q.awaitTermination() else q.processAllAvailable()
     } finally q.stop()
-    settle(s, cs, name, shape(cs.table(name)))
+    settle(s, cs, name)(shape)
   }
 
   /** RocksDB state-store provider, required by `transformWithState` —
@@ -144,11 +135,9 @@ object StreamingBridge {
     // strings is paid 4×)
     Tables.events(s, d).select("user_id", "event_type", "value")
       .repartition(4).write.mode("overwrite").parquet(root)
-    // private child session for the STREAM (the runSettled discipline):
-    // this bridge pays the per-partition state commit on EVERY one of its
-    // ≥4 micro-batches, so the StateParts sizing matters most here
-    val cs = s.newSession()
-    StateParts.foreach { case (k, v) => cs.conf.set(k, v) }
+    // the runSettled child session: this bridge pays the per-partition
+    // state commit on every one of its ≥4 micro-batches
+    val cs = Session.child(s, stateParts(s))
     val raw = Tables.footerSchema(cs, root)
     val src =
       cs.readStream.schema(raw).option("maxFilesPerTrigger", "1").parquet(root)
@@ -162,7 +151,7 @@ object StreamingBridge {
       finally q.stop()
     // settle (which DROPS the temp view) before the probe assert — a probe
     // failure must not leak the memory-sink table for the JVM lifetime
-    val settled = settle(s, cs, name, cs.table(name))
+    val settled = settle(s, cs, name)(identity)
     require(nBatches >= 2,
       s"AvailableNow ran $nBatches micro-batch(es) — maxFilesPerTrigger not honored")
     settled.orderBy("user_id", "event_type")
@@ -402,10 +391,9 @@ object StreamingBridge {
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"))
       val schema = ev.schema
       val totals = scala.collection.concurrent.TrieMap.empty[Long, Long]
-      // child session: state-partition sizing (see StateParts) — the count
-      // state is one long per user, and BOTH phases pay per-partition commits
-      val cs = s.newSession()
-      StateParts.foreach { case (k, v) => cs.conf.set(k, v) }
+      // one child session for both phases, so both run with the same state
+      // partitions (see stateParts); both pay per-partition commits
+      val cs = Session.child(s, stateParts(s))
       def run(): Unit = {
         val q = cs.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
@@ -465,10 +453,8 @@ object StreamingBridge {
       val ev = Tables.events(s, d).select(col("event_id"), col("ts"))
       val schema = ev.schema
       val counts = scala.collection.concurrent.TrieMap.empty[Long, Long]
-      // child session: state-partition sizing (see StateParts), carried
-      // consistently across both checkpointed phases
-      val cs = s.newSession()
-      StateParts.foreach { case (k, v) => cs.conf.set(k, v) }
+      // one child session for both checkpointed phases (see stateParts)
+      val cs = Session.child(s, stateParts(s))
       def run(): Unit = {
         val q = cs.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")

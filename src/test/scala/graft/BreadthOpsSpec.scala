@@ -163,9 +163,13 @@ class BreadthOpsSpec extends SparkSpec {
   }
 
   test("available-now: multi-batch totals equal the one-shot aggregate") {
-    // the builder itself REQUIRES >= 2 micro-batches (rate-limit pin)
-    val got = queries.StreamingBridge.availableNowViaStream(spark, sf)
-      .collect().map(_.toString).sorted
+    // the builder itself REQUIRES >= 2 micro-batches (rate-limit pin); the
+    // 4-file split with maxFilesPerTrigger=1 must keep its >= 4 batches
+    val (rows, progress) = StreamProgress.record(spark)(
+      queries.StreamingBridge.availableNowViaStream(spark, sf).collect())
+    assert(progress.count(_.numInputRows > 0) >= 4,
+      s"${progress.size} micro-batches, ${progress.count(_.numInputRows > 0)} with data")
+    val got = rows.map(_.toString).sorted
     val exp = Tables.events(spark, sf)
       .groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n"),
@@ -233,7 +237,11 @@ class BreadthOpsSpec extends SparkSpec {
   }
 
   test("full-outer interval join emits matched plus BOTH unmatched directions") {
-    val rows = queries.StreamingBridge.intervalFullViaStream(spark, sf).collect()
+    // unmatched rows emit only on state eviction, in the trailing
+    // watermark micro-batch after the data batch
+    val (rows, progress) = StreamProgress.record(spark)(
+      queries.StreamingBridge.intervalFullViaStream(spark, sf).collect())
+    assert(progress.size >= 2, s"${progress.size} micro-batch(es): no trailing watermark batch")
     val matched = rows.count(r => !r.isNullAt(1) && !r.isNullAt(2))
     val sOnly = rows.count(r => !r.isNullAt(1) && r.isNullAt(2))
     val pOnly = rows.count(r => r.isNullAt(1) && !r.isNullAt(2))

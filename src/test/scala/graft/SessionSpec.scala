@@ -31,6 +31,28 @@ class SessionSpec extends SparkSpec {
     }
   }
 
+  test("a conf set through Session.child is not visible on the parent session") {
+    val key = "spark.sql.cteRecursionRowLimit"
+    val before = spark.conf.getOption(key)
+    val child = Session.child(spark, key -> "-1")
+    assert(child.conf.get(key) === "-1")
+    assert(child.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    assert(spark.conf.getOption(key) === before)
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "true")
+  }
+
+  test("after Session.reset a second stream_dedup run compiles no codegen class") {
+    // Each bridge runs on a new child session. With artifact isolation on,
+    // each child's tasks ran under their own classloader, a new key in the
+    // codegen cache, and the second run recompiled all 13 classes.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    run("stream_dedup")
+    Session.reset(spark)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run("stream_dedup")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0L)
+  }
+
   test("Session.reset frees every persistent RDD and cached plan") {
     Seq("dedup_minhash_lsh", "graph_components", "q_cached_scan").foreach(run)
     val cacheManager = spark.sharedState.cacheManager

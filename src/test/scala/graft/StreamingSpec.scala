@@ -144,6 +144,19 @@ class StreamingSpec extends SparkSpec {
     assert(kept >= total / 2, s"on-time rows lost: kept=$kept total=$total")
   }
 
+  test("the two-phase checkpoint bridges run both phases with one state-partition count") {
+    // stream_recovery and stream_late_drop stop and restart on one
+    // checkpoint; both phases run on the same child session
+    for (bridge <- Seq("stream_recovery", "stream_late_drop")) {
+      val (_, progress) = StreamProgress.record(spark)(
+        queries.StreamingBridge.queries(bridge)(spark, sf).collect())
+      assert(progress.map(_.runId).distinct.size === 2, s"$bridge: expected two phases")
+      assert(progress.map(_.id).distinct.size === 1, s"$bridge: phases on different checkpoints")
+      assert(StreamProgress.stateStores(progress).toSet ===
+        Set(math.min(8, spark.sparkContext.defaultParallelism).toLong), bridge)
+    }
+  }
+
   test("streaming dedup drops re-delivered event_ids within the watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -159,15 +172,46 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stream_dedup's calling thread starts one job: settle none, the collect one") {
+    // The memory sink's rows are already on the driver, so settle's collect
+    // starts no job; the micro-batch runs on the stream's own thread and
+    // job group. Read three times, so a warm-up job would show.
+    val jobs = (1 to 3).map { _ =>
+      JobCounter.count(spark)(queries.StreamingBridge.dedupViaStream(spark, sf).collect())._2
+    }
+    assert(jobs === Seq(1, 1, 1))
+  }
+
+  test("a settled bridge frame plans with no exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val df = queries.StreamingBridge.dedupViaStream(spark, sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"settled frame shuffles:\n$plan")
+  }
+
+  test("a bridge's stateful operator runs min(8, defaultParallelism) state stores") {
+    val (_, progress) = StreamProgress.record(spark)(
+      queries.StreamingBridge.dedupViaStream(spark, sf).collect())
+    val stores = StreamProgress.stateStores(progress)
+    assert(stores.nonEmpty, "no stateful operator reported progress")
+    assert(stores.toSet === Set(math.min(8, spark.sparkContext.defaultParallelism).toLong))
+  }
+
   test("bridges leave no conf or temp-view footprint on the shared session") {
     // The isolation contract: per-query streaming confs (max watermark
-    // policy, RocksDB provider) and the memory-sink temp view live on the
-    // bridge's private child session; the caller's session must come back
-    // byte-identical. A concurrently-built query observing a flipped conf
-    // is the race this pins against.
+    // policy, RocksDB provider, state partitions, artifact isolation) and
+    // the memory-sink temp view live on the bridge's private child session
+    // (`Session.child`), and settle drops the view; the caller's session
+    // must come back byte-identical. A concurrently-built query observing a
+    // flipped conf is the race this pins against.
     val watchedConfs = Seq(
       "spark.sql.streaming.multipleWatermarkPolicy",
-      "spark.sql.streaming.stateStore.providerClass")
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions",
+      "spark.sql.artifact.isolation.enabled")
     val before = watchedConfs.map(k => k -> spark.conf.getOption(k))
     // one bridge per conf class, both settle non-empty
     assert(queries.StreamingBridge.queries("stream_interval_left")(spark, sf)
